@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from deepdb_public_spark.engine import Engine
+from deepdb_public_spark.operators.lifecycle import run_concurrently
 from deepdb_public_spark.operators.partitioning import (
     tiny_literal_frame as _tiny_frame,
 )
@@ -1624,8 +1625,8 @@ def _x_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(F.col("doc_id") % 5 == 0)
     # the production shape IS index-once-probe-many: memoize the
     # built index on the shared engine (round 9) so bench reps pay
-    # the probe, not a rebuild. UNTRACKED eager localCheckpoints —
-    # release_cached() must not drop them between reps (the python
+    # the probe, not a rebuild. UNREGISTERED eager localCheckpoints —
+    # lifecycle.release() must not drop them between reps (the python
     # refs on the engine keep the blocks alive).
     cached = getattr(eng, "_x35_index", None)
     if cached is None:
@@ -1753,8 +1754,8 @@ def _x_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the index ONCE before the stream starts (lazy plans
     # would re-shingle the corpus per micro-batch) and MEMOIZE it on
     # the shared engine across reps (round 9 — same rationale as x35:
-    # production writes the index to parquet once; untracked eager
-    # localCheckpoints survive release_cached between bench reps)
+    # production writes the index to parquet once; unregistered eager
+    # localCheckpoints survive lifecycle.release between bench reps)
     cached = getattr(eng, "_x42_index", None)
     if cached is None:
         import time as _time
@@ -2030,25 +2031,21 @@ def _card_oracle(cases) -> str:
     return " UNION ALL ".join(parts)
 
 
-def _qerr_rows(eng, cases) -> list[tuple]:
+def _qerr_rows(eng, cases, max_variants=1) -> list[tuple]:
     # truth counts collected CONCURRENTLY (round 13, guide §1.2): the
     # per-case exact counts are independent sub-second jobs, and
     # running them serially paid scheduler + plan latency once per
-    # case (m01: 19 tiny jobs, ~0.9s of gaps per rep). Thread-pooled
-    # collects overlap that latency; each count is deterministic, so
+    # case (m01: 19 tiny jobs, ~0.9s of gaps per rep). Overlapped
+    # collects hide that latency; each count is deterministic, so
     # the rows are byte-identical to the serial loop's.
-    from concurrent.futures import ThreadPoolExecutor
-
     qs = [(qid, eng.parse(sql)) for qid, sql in cases]
     # plan compilation stays serial (the engine's estimate-priced join
     # ordering shares caches); only the independent collect()s overlap
     dfs = [eng.query(q) for _qid, q in qs]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        futs = [ex.submit(df.collect) for df in dfs]
-        trues = [int(f.result()[0][0]) for f in futs]
+    trues = [int(r[0][0]) for r in run_concurrently([df.collect for df in dfs])]
     rows = []
     for (qid, q), true in zip(qs, trues):
-        est = float(eng.ensemble.cardinality(q))
+        est = float(eng.ensemble.cardinality(q, max_variants=max_variants))
         qerr = max(est / max(true, 1), true / max(est, 1e-9))
         rows.append((qid, true, bool(qerr < _MODEL_QERR_BUDGET)))
     return rows
@@ -2095,15 +2092,14 @@ def _ensure_models(eng, table_sets_budgets) -> None:
     # Spark-side sampling overlaps the other's driver-side learn
     # recursion (verified byte-identical to sequential training —
     # thread scheduling never reaches the seeded numpy recursion)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(missing)) as ex:
-        futs = [
-            ex.submit(train_spn_model, eng.catalog, eng.schema, ts, budget)
-            for ts, budget in missing
-        ]
-        for f in futs:
-            eng.ensemble.add_model(f.result())
+    models = run_concurrently([
+        lambda ts=ts, budget=budget: train_spn_model(
+            eng.catalog, eng.schema, ts, budget
+        )
+        for ts, budget in missing
+    ])
+    for model in models:
+        eng.ensemble.add_model(model)
 
 
 def _m_multi_spn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2141,22 +2137,9 @@ def _m_multi_spn_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
             ({"customer"}, 60_000),
         ],
     )
-    # same concurrent-truth shape as _qerr_rows; only the estimator
-    # call differs (variant averaging)
-    from concurrent.futures import ThreadPoolExecutor
-
-    qs = [(qid, eng.parse(sql)) for qid, sql in _M03_CASES]
-    dfs = [eng.query(q) for _qid, q in qs]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        futs = [ex.submit(df.collect) for df in dfs]
-        trues = [int(f.result()[0][0]) for f in futs]
-    rows = []
-    for (qid, q), true in zip(qs, trues):
-        est = float(eng.ensemble.cardinality(q, max_variants=2))
-        qerr = max(est / max(true, 1), true / max(est, 1e-9))
-        rows.append((qid, true, bool(qerr < _MODEL_QERR_BUDGET)))
-    return _tiny_frame(spark, 
-        rows, "qid string, true_cnt long, qerr_ok boolean"
+    return _tiny_frame(spark,
+        _qerr_rows(eng, _M03_CASES, max_variants=2),
+        "qid string, true_cnt long, qerr_ok boolean",
     )
 
 
@@ -2445,13 +2428,8 @@ def _m_factorized_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full latency end-to-end. Plan compilation stays serial (shared
     # estimate caches); only the collect()s overlap, so the rows are
     # byte-identical to the serial loop's.
-    from concurrent.futures import ThreadPoolExecutor
-
     dfs = [eng.query(s) for s in (sql1, sql2, sql3, sql4)]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        r1, r2, r3, r4 = [
-            f.result() for f in [ex.submit(df.collect) for df in dfs]
-        ]
+    r1, r2, r3, r4 = run_concurrently([df.collect for df in dfs])
 
     (e1,) = eng.ensemble.aqp(eng.parse(sql1))
     t1 = int(r1[0]["v"])
@@ -3162,23 +3140,18 @@ def _m_sim_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one sketch scan-aggregate for ALL queries, replacing one
         # count job per (query, method) — counts identical. The two
         # aggregates are independent scans, so they overlap through a
-        # thread pool (round 14, guide §2.6 — the m19 pattern; each
+        # thread each (round 14, guide §2.6 — the m19 pattern; each
         # call's plan compile and collect are serial per thread but
         # the Spark jobs back-fill each other's tails).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_exact = pool.submit(
-                similarity_selectivity_many,
+        exacts, ests = run_concurrently([
+            lambda: similarity_selectivity_many(
                 emb, "embedding", "vec_id", qvecs, 0.3,
-            )
-            f_est = pool.submit(
-                similarity_selectivity_many,
+            ),
+            lambda: similarity_selectivity_many(
                 emb, "embedding", "vec_id", qvecs, 0.3,
                 method="sketch", sketches=sk, planes=planes,
-            )
-            exacts = f_exact.result()
-            ests = f_est.result()
+            ),
+        ])
     finally:
         sk.unpersist()
     out = []

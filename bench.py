@@ -178,7 +178,7 @@ def main() -> None:
     for df in eng.catalog.values():
         df.selectExpr("count(1)").collect()
 
-    from deepdb_public_spark.operators.dedup import release_cached
+    from deepdb_public_spark.operators.lifecycle import release
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
@@ -212,7 +212,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 queries[name](spark, sf_dir).collect()
                 timings_first[name] = round(time.perf_counter() - t0, 4)
-                release_cached()
+                release()
             for _rep in range(reps):
                 t0 = time.perf_counter()
                 queries[name](spark, sf_dir).collect()
@@ -222,7 +222,7 @@ def main() -> None:
                 # drop operator-persisted intermediates so hundreds of
                 # runs don't compound executor-memory pressure into
                 # GC-driven noise
-                release_cached()
+                release()
             pass_min[name] = min(samples[name][-reps:])
             _jvm_gc(spark)
         pass_totals.append(round(sum(pass_min.values()), 4))

@@ -35,39 +35,8 @@ from ..functions.hashing import (
 )
 from ..functions.text import char_ngrams, fingerprint_md5, word_tokens
 from ..functions.vectors import hyperplane_sign_bits
-from .partitioning import (
-    spread_small_input,
-    tiny_literal_frame,
-    track_local_checkpoint,
-)
-
-# DataFrames persisted by dedup operators. A long-lived session that
-# runs many corpora should call release_cached() between them —
-# Spark's CacheManager holds persisted plans until explicitly
-# unpersisted (round-1 leak).
-_CACHED: list = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_cached() -> None:
-    """Unpersist every intermediate cached by dedup operators, plus
-    any localCheckpoint blocks left by spread_small_input / pointer
-    jumping (call only after results are materialized — checkpoint
-    lineage is truncated, so pending consumers cannot recompute)."""
-    while _CACHED:
-        df = _CACHED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    from .partitioning import release_local_checkpoints
-
-    release_local_checkpoints()
+from . import lifecycle
+from .partitioning import spread_small_input, tiny_literal_frame
 
 
 def capped_bucket_pairs(
@@ -108,12 +77,14 @@ def capped_bucket_pairs(
     window + the upstream signature subtree (round-14 profile: 4
     stages x 9-16s executor time at sf0.1; eager fill cuts the
     operator's candidate phase 2.5s -> 1.8s). Registered with
-    release_cached() like every dedup intermediate.
+    ``lifecycle`` like every dedup intermediate.
     """
     from pyspark.sql.window import Window
 
     wb = Window.partitionBy(*bucket_cols)
-    sized = _persist(members.withColumn("__bsz", F.count(F.lit(1)).over(wb)))
+    sized = lifecycle.persist(
+        members.withColumn("__bsz", F.count(F.lit(1)).over(wb))
+    )
     sized.count()
     small = sized.filter(F.col("__bsz") <= max_bucket_size)
     pairs_small = (
@@ -254,8 +225,8 @@ def duplicate_clusters(
             )
             .persist()
         )
-        labels = track_local_checkpoint(
-            ids.withColumn("cluster", F.col("id")).localCheckpoint()
+        labels = lifecycle.checkpoint(
+            ids.withColumn("cluster", F.col("id")), eager=True
         )
         try:
             changed = 0
@@ -274,9 +245,8 @@ def duplicate_clusters(
                         F.col("cluster"), F.coalesce(F.col("nmin"), F.col("cluster"))
                     ).alias("cluster"),
                 )
-                stepped = track_local_checkpoint(
-                    stepped.localCheckpoint()  # eager; truncates lineage
-                )
+                # eager: truncates lineage
+                stepped = lifecycle.checkpoint(stepped, eager=True)
                 changed = stepped.filter(F.col("old") != F.col("cluster")).count()
                 labels = stepped.select("id", "cluster")
                 if changed == 0:
@@ -604,9 +574,9 @@ def prepare_jaccard_corpus(
     (threshold sweeps, bench reps) build it once and pass it back via
     ``prepared=``; same memoization shape as the x35 incremental-dedup
     index. ``checkpoint=True`` materializes the tables via eager
-    localCheckpoint so the state survives release_cached() and never
-    recomputes shingle arrays (callers own the lifetime; blocks free
-    when the returned refs drop).
+    localCheckpoint so probes never recompute shingle arrays; like
+    every registered intermediate, the state lives until
+    ``lifecycle.release()`` or the enclosing ``scope()`` exits.
 
     Keys: groups (sh, ids), n_vocab, and — only when
     n_vocab <= _DENSE_VOCAB_MAX — vocab (t, pos), n_words, bm
@@ -652,9 +622,9 @@ def prepare_jaccard_corpus(
     # priced into the recorded build cost, not the probes.
     if checkpoint:
         par = df.sparkSession.sparkContext.defaultParallelism
-        groups = groups.repartition(par).localCheckpoint()
+        groups = lifecycle.checkpoint(groups.repartition(par), eager=True)
     else:
-        groups = _persist(groups)
+        groups = lifecycle.persist(groups)
     s = groups.select(F.col("ids")[0].alias("id"), "sh")
     # corpus-adaptive strategy choice (two cheap aggregates over the
     # persisted groups): dense vocab -> bitmap encoding; dense vocab
@@ -665,7 +635,7 @@ def prepare_jaccard_corpus(
     # time for the same 60k-row distinct chain).
     vocab = s.select(F.explode("sh").alias("t")).distinct()
     if not checkpoint:
-        vocab = _persist(vocab)
+        vocab = lifecycle.persist(vocab)
     n_vocab = vocab.count()
     prepared: dict = {
         "groups": groups, "n_vocab": n_vocab,
@@ -685,10 +655,11 @@ def prepare_jaccard_corpus(
             # vocab is <= _DENSE_VOCAB_MAX rows (broadcast-sized, fine
             # at 1 partition); bm is representative-sized and feeds
             # the per-probe verify join — re-widen like groups above
-            vocab = vocab.localCheckpoint()
-            bm = bm.repartition(
-                df.sparkSession.sparkContext.defaultParallelism
-            ).localCheckpoint()
+            vocab = lifecycle.checkpoint(vocab, eager=True)
+            bm = lifecycle.checkpoint(
+                bm.repartition(df.sparkSession.sparkContext.defaultParallelism),
+                eager=True,
+            )
         # bm stays LAZY deliberately: persisting it was measured
         # twice to be slower — round 13 (lazy persist, 3.93 -> 4.89
         # on x20) and round 14 (eager persist+count: the all-pairs
@@ -995,10 +966,10 @@ def minhash_lsh_pairs(
         .select(F.col(id_col).alias("id"), hashed.alias("sh"))
         .filter(F.size("sh") > 0)
     )
-    groups = _persist(
+    groups = lifecycle.persist(
         docs.groupBy("sh").agg(F.sort_array(F.collect_list("id")).alias("ids"))
     )
-    sigs = _persist(
+    sigs = lifecycle.persist(
         groups.select(F.col("ids")[0].alias("id"), "sh").withColumn(
             "sig", minhash_signature(F.col("sh"), n_hashes)
         )
@@ -1042,7 +1013,7 @@ def minhash_lsh_pairs(
         # when the candidate set dwarfs the true-pair set. Persist the
         # candidates (the verify join reuses them either way) and gate
         # on their count.
-        cand = _persist(cand)
+        cand = lifecycle.persist(cand)
         apply_prefilter = cand.count() >= prefilter_min_candidates
     if apply_prefilter:
         sg = sigs.select("id", "sig")
@@ -1131,7 +1102,7 @@ def build_minhash_index(
     hashed = F.array_sort(
         F.array_distinct(F.transform(shingle, lambda t: F.xxhash64(t)))
     )
-    docs = _persist(
+    docs = lifecycle.persist(
         spread_small_input(df)
         .select(F.col(id_col).alias("id"), hashed.alias("sh"))
         .filter(F.size("sh") > 0)
@@ -1245,7 +1216,7 @@ def dedup_against_index(
     # the batch band table feeds TWO consumers (the probe-key
     # broadcast and the candidate join); without a persist the batch
     # is re-shingled and re-signed once per consumer
-    new_bands = _persist(new_bands)
+    new_bands = lifecycle.persist(new_bands)
     from pyspark.sql.window import Window
 
     # restrict the index to buckets the batch actually probes BEFORE
@@ -1371,7 +1342,7 @@ def simhash_pairs(
     # of 2 keeps the key width a sane long even at radius 0/1)
     n_blocks = max(2, max_hamming + 1)
     df = spread_small_input(df)
-    groups = _persist(
+    groups = lifecycle.persist(
         df.filter(
             F.col(text_col).isNotNull()
             & (F.length(F.trim(F.col(text_col))) > 0)
@@ -1436,7 +1407,7 @@ def embedding_neardup_pairs(
     # undefined for them, and dot/(0 * nb) throws DIVIDE_BY_ZERO
     # under Spark's default ANSI mode (or silently NULLs the pair
     # with ANSI off)
-    base = _persist(
+    base = lifecycle.persist(
         spread_small_input(df)
         .select(
             F.col(id_col).alias("id"),
@@ -1461,7 +1432,7 @@ def embedding_neardup_pairs(
         dim = len(probe["v"])
         rng = np.random.default_rng(seed)
         planes = rng.standard_normal((n_planes, dim)).tolist()
-        bucketed = _persist(
+        bucketed = lifecycle.persist(
             base.withColumn("bucket", hyperplane_sign_bits(F.col("v"), planes))
         )
         cand = capped_bucket_pairs(
@@ -1543,7 +1514,7 @@ def semantic_dedup(
         # Chain depth halves per round, so rounds = O(log depth); each
         # round is one equi-join. localCheckpoint truncates the lineage
         # so the plan doesn't grow exponentially with rounds.
-        reps = track_local_checkpoint(reps.localCheckpoint(eager=True))
+        reps = lifecycle.checkpoint(reps, eager=True)
         while True:
             parent = reps.select(
                 F.col("id").alias("p_id"), F.col("rep").alias("p_rep")
@@ -1556,9 +1527,7 @@ def semantic_dedup(
                     F.col("p_rep").isNotNull().alias("moved"),
                 )
             )
-            stepped = track_local_checkpoint(
-                stepped.localCheckpoint(eager=True)
-            )
+            stepped = lifecycle.checkpoint(stepped, eager=True)
             moved = stepped.filter("moved").count()
             reps = stepped.drop("moved")
             if moved == 0:

@@ -18,27 +18,7 @@ import re as _re
 
 from pyspark.sql import DataFrame
 
-# DataFrames whose localCheckpoint THIS package created. Only these
-# are touched by release_local_checkpoints(): a checkpoint created by
-# user code elsewhere in the session must never be swept (releasing a
-# checkpoint truncated lineage makes any not-yet-materialized result
-# built on it unrecomputable).
-_TRACKED: list[DataFrame] = []
-
-
-def track_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Register a locally-checkpointed DataFrame for deterministic
-    release by release_local_checkpoints(). Call this on the result of
-    every ``df.localCheckpoint(...)`` this package creates."""
-    _TRACKED.append(df)
-    return df
-
-
-# spread_small_input results persisted by this package; released (with
-# the tracked checkpoints) by release_local_checkpoints(). Unlike a
-# checkpoint, a released persist is recomputable — lineage is intact —
-# so releasing early can never strand a pending consumer.
-_SPREAD_PERSISTED: list[DataFrame] = []
+from . import lifecycle
 
 
 def spread_small_input(df: DataFrame, barrier: str = "persist") -> DataFrame:
@@ -67,7 +47,7 @@ def spread_small_input(df: DataFrame, barrier: str = "persist") -> DataFrame:
       Best for operators whose downstream plan consumes the spread
       frame LINEARLY (one aggregate/join chain): x36 2.70 -> 2.16,
       m09 14.8 -> 12.0s executor in the interleaved A/B.
-    - ``barrier="checkpoint"``: the round-13 lazy tracked
+    - ``barrier="checkpoint"``: the round-13 lazy registered
       localCheckpoint. Best for operators whose downstream plan FANS
       OUT into several branches that each shuffle the same expensive
       derivation (tokenize/explode/distinct): AQE's stage-level
@@ -81,8 +61,8 @@ def spread_small_input(df: DataFrame, barrier: str = "persist") -> DataFrame:
       x43 48 -> 35s executor, x46 37 -> 29, x50 12.3 -> 7.9,
       x52 35.7 -> 29.0.
 
-    Blocks from either flavor are freed deterministically by
-    release_local_checkpoints() (wired into dedup.release_cached()).
+    Either flavor is registered with ``lifecycle`` and freed by
+    ``release()`` or the enclosing ``scope()``.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
@@ -93,57 +73,8 @@ def spread_small_input(df: DataFrame, barrier: str = "persist") -> DataFrame:
     if current >= target:
         return df
     if barrier == "checkpoint":
-        return track_local_checkpoint(
-            df.repartition(target).localCheckpoint(eager=False)
-        )
-    out = df.repartition(target).persist()
-    _SPREAD_PERSISTED.append(out)
-    return out
-
-
-def release_local_checkpoints(spark=None) -> int:
-    """Drop the storage blocks THIS package created — the
-    spread_small_input persists and every locally-checkpointed RDD
-    registered via track_local_checkpoint; returns how many were
-    unpersisted. Checkpoints created by other code in the session are
-    never touched (round-5 advice: the old session-wide
-    getPersistentRDDs sweep could truncate an unrelated pipeline's
-    lineage out from under it).
-
-    Call ONLY between pipelines, after results are materialized:
-    localCheckpoint truncates lineage, so a not-yet-collected result
-    that still references a released checkpoint cannot be recomputed.
-    This is the deterministic counterpart to waiting for the driver's
-    ContextCleaner GC — the same contract as dedup.release_cached(),
-    which calls this. The ``spark`` argument is accepted for backward
-    compatibility and ignored (tracking is per-package, not
-    per-session).
-    """
-    released = 0
-    while _SPREAD_PERSISTED:
-        df = _SPREAD_PERSISTED.pop()
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:
-            continue
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            # the analyzed plan of a checkpointed DataFrame is the
-            # LogicalRDD wrapping the exact RDD localCheckpoint
-            # persisted (verified against Spark 4.x); unpersisting it
-            # frees the blocks without touching any other RDD
-            jrdd = df._jdf.queryExecution().analyzed().rdd()
-            if jrdd.isLocallyCheckpointed():
-                jrdd.unpersist(False)
-                released += 1
-        except Exception:
-            # py4j internals shifted (non-classic Spark runtime): fall
-            # back to ContextCleaner GC semantics rather than fail
-            # hygiene
-            continue
-    return released
+        return lifecycle.checkpoint(df.repartition(target), eager=False)
+    return lifecycle.persist(df.repartition(target))
 
 
 def _sql_literal(v, typ: str) -> str:

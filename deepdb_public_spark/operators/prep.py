@@ -159,14 +159,14 @@ def encode_table(
                     [StructField(col, StringType()), StructField("__code", LongType())]
                 ),
             )
-            from .partitioning import track_local_checkpoint
+            from .lifecycle import checkpoint
 
             # materialize the mapping NOW (eager localCheckpoint,
             # truncating the lineage back through `distinct`): the
             # encode join is lazy, and unpersisting `distinct` before
             # it ran re-executed the whole distinct+global-sort per
             # large-domain column at first action
-            join_side = track_local_checkpoint(join_side.localCheckpoint())
+            join_side = checkpoint(join_side, eager=True)
         if col not in dicts:
             distinct.unpersist()
         out = (

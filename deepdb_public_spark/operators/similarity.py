@@ -21,11 +21,8 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine, hyperplane_sign_bits  # noqa: F401 (sign_bits used by lsh_topk)
 
 
-from .partitioning import (
-    spread_small_input,
-    tiny_literal_frame,
-    track_local_checkpoint,
-)
+from . import lifecycle
+from .partitioning import spread_small_input, tiny_literal_frame
 
 
 import weakref
@@ -363,10 +360,9 @@ class IvfIndex:
                 # the write below isn't "overwriting a path being read
                 # from"; one hot cell is bounded (that's why it's
                 # being split)
-                pred = track_local_checkpoint(
-                    km.transform(rows)
-                    .select("id", "v", "prediction")
-                    .localCheckpoint()
+                pred = lifecycle.checkpoint(
+                    km.transform(rows).select("id", "v", "prediction"),
+                    eager=True,
                 )
                 counts = {
                     r["prediction"]: r["count"]
@@ -1186,6 +1182,14 @@ def _lloyd_fit_multi(
             ],
             axis=1,
         )
+        # a NULL sum (every vector in the group shorter than dim, with
+        # ANSI off) arrives as NaN; NaN/inf elements sum to non-finite.
+        # Either would silently poison the centroids.
+        if not np.isfinite(grp_sums).all():
+            raise ValueError(
+                f"{op_name}: vectors must have {dim} finite elements "
+                "(got a NULL or non-finite per-cluster sum)"
+            )
         new_cents: list[list[list[float]]] = []
         for s, (start, width, k) in enumerate(specs):
             s0 = 0 if start is None else start

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import lifecycle
 from .partitioning import spread_small_input
 from ..functions.text import (
     fingerprint_md5,
@@ -320,7 +321,8 @@ def bpe_learn(
             lambda i: F.col("w").substr(i, F.lit(1)),
         ).alias("symbols"),
         "c",
-    ).localCheckpoint(eager=False)
+    )
+    wc = lifecycle.checkpoint(wc, eager=False)
 
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -370,7 +372,8 @@ def bpe_learn(
                 ).otherwise(F.concat(acc, F.array(s))),
             ).alias("symbols"),
             "c",
-        ).localCheckpoint(eager=False)
+        )
+        wc = lifecycle.checkpoint(wc, eager=False)
     return merges, wc
 
 

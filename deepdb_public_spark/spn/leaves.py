@@ -201,19 +201,24 @@ class Leaf:
         values (misses are ignored, as the old dict lookup did), and
         the remaining-mass total is a sequential cumsum in ascending
         value order — the exact summation order of the old
-        sorted-items Python sum, so results are bit-identical."""
+        sorted-items Python sum, so results are bit-identical.
+        Duplicate delta values are summed first, so with non-negative
+        counts ``remove_counts([v, v], [a, b])`` equals removing ``a``
+        then ``b`` (a clamp at zero is the same either way)."""
         mass = self.probs * prior_n
-        vals = np.asarray(values, dtype=np.float64)
+        vals, inv = np.unique(
+            np.asarray(values, dtype=np.float64), return_inverse=True
+        )
+        cnts = np.bincount(
+            inv, weights=np.asarray(counts, dtype=np.float64),
+            minlength=len(vals),
+        )
         if len(vals) and len(self.values):
             idx = np.searchsorted(self.values, vals)
             idx = np.minimum(idx, len(self.values) - 1)
             hit = self.values[idx] == vals
             hit_idx = idx[hit]
-            mass[hit_idx] = np.maximum(
-                0.0,
-                mass[hit_idx]
-                - np.asarray(counts, dtype=np.float64)[hit] * scale,
-            )
+            mass[hit_idx] = np.maximum(0.0, mass[hit_idx] - cnts[hit] * scale)
         null_mass = max(0.0, self.null_prob * prior_n - null_count * scale)
         keep = mass > 0
         kept = mass[keep]

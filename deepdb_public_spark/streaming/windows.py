@@ -317,12 +317,13 @@ def streaming_index_dedup(
     """
     import pyspark.sql.functions as F
 
-    from ..operators import dedup as _dedup
     from ..operators.dedup import dedup_against_index
+    from ..operators.lifecycle import scope
 
     def _handle(batch: DataFrame, bid: int) -> None:
-        before = len(_dedup._CACHED)
-        try:
+        # frees only this batch's intermediates, never the index's or
+        # another query's
+        with scope():
             pairs = dedup_against_index(
                 batch, text_col, id_col, index_bands, index_sets,
                 threshold=threshold, **dedup_kwargs,
@@ -334,14 +335,6 @@ def streaming_index_dedup(
                 .partitionBy("batch_id")
                 .parquet(out_path)
             )
-        finally:
-            # unpersist only this batch's intermediates, not the index
-            while len(_dedup._CACHED) > before:
-                df = _dedup._CACHED.pop()
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
 
     q = (
         stream_docs.writeStream.foreachBatch(_handle)

@@ -149,9 +149,9 @@ def main() -> int:
         # operator-persisted intermediates so 78 entries don't
         # compound executor-memory pressure
         try:
-            from deepdb_public_spark.operators.dedup import release_cached
+            from deepdb_public_spark.operators.lifecycle import release
 
-            release_cached()
+            release()
         except Exception:
             pass
         status = (

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from deepdb_public_spark.operators.dedup import (
     capped_bucket_pairs,
     minhash_lsh_pairs,
-    release_cached,
     simhash_pairs,
 )
+from deepdb_public_spark.operators.lifecycle import release
 
 
 def _connected_one_cluster(pairs, n):
@@ -62,7 +62,7 @@ def test_minhash_identical_docs_complete_pairs(spark):
     assert len(rows) == n * (n - 1) // 2
     assert all(j == 1.0 for _, _, j in rows)
     assert _connected_one_cluster([(a, b) for a, b, _ in rows], n)
-    release_cached()
+    release()
 
 
 def test_minhash_distinct_sets_capped_candidates(spark):
@@ -84,7 +84,7 @@ def test_minhash_distinct_sets_capped_candidates(spark):
     # legitimately scatter across buckets; connectivity under the cap
     # is asserted by test_capped_bucket_pairs_linear_and_connected.)
     assert 0 < len(rows) <= n * 4 * 4
-    release_cached()
+    release()
 
 
 def test_simhash_identical_docs_complete_pairs(spark):
@@ -100,4 +100,4 @@ def test_simhash_identical_docs_complete_pairs(spark):
     assert len(rows) == n * (n - 1) // 2
     assert all(h == 0 for _, _, h in rows)
     assert _connected_one_cluster([(a, b) for a, b, _ in rows], n)
-    release_cached()
+    release()

@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 from deepdb_public_spark.operators.dedup import (
     build_minhash_index,
     dedup_against_index,
-    release_cached,
 )
+from deepdb_public_spark.operators.lifecycle import release
 from deepdb_public_spark.operators.prep import profile_table
 
 BASE = (
@@ -44,7 +44,7 @@ class TestDedupIndex:
         pairs = dedup_against_index(
             new, "text", "doc_id", bands, sets, threshold=0.6
         ).collect()
-        release_cached()
+        release()
         got = {(r.new_id, r.index_id): r.jaccard for r in pairs}
         assert got.get((100, 1)) == 1.0
         assert (101, 1) in got and got[(101, 1)] >= 0.6
@@ -58,13 +58,13 @@ class TestDedupIndex:
         bands, sets = build_minhash_index(index, "text", "doc_id")
         bands.write.parquet(str(tmp_path / "bands"))
         sets.write.parquet(str(tmp_path / "sets"))
-        release_cached()
+        release()
         bands2 = spark.read.parquet(str(tmp_path / "bands"))
         sets2 = spark.read.parquet(str(tmp_path / "sets"))
         pairs = dedup_against_index(
             new, "text", "doc_id", bands2, sets2, threshold=0.8
         ).collect()
-        release_cached()
+        release()
         assert [(r.new_id, r.index_id) for r in pairs] == [(50, 1)]
 
     def test_oversized_bucket_truncated(self, spark):
@@ -78,7 +78,7 @@ class TestDedupIndex:
             max_bucket_size=16,
         )
         n = pairs.count()
-        release_cached()
+        release()
         assert 1 <= n <= 16  # capped, and the duplicate is still caught
 
 
@@ -111,7 +111,7 @@ class TestIndexAppend:
         hits2 = dedup_against_index(
             batch2, "text", "doc_id", bands2, sets2, threshold=0.8
         ).collect()
-        release_cached()
+        release()
         assert [(r.new_id, r.index_id) for r in hits2] == [(20, 11)]
 
 
@@ -150,8 +150,41 @@ class TestStreamingIndexDedup:
                 new, "text", "doc_id", bands, sets, threshold=0.6
             ).collect()
         )
-        release_cached()
+        release()
         assert got == want and (100, 1) in got
+
+    def test_stream_frees_batch_state(self, spark, tmp_path):
+        """Each micro-batch frees what it persisted or checkpointed
+        (spread barrier included) once its pairs are written: a live
+        stream must not keep one batch's state per batch forever."""
+        from deepdb_public_spark.streaming.windows import streaming_index_dedup
+
+        index = _corpus(
+            spark,
+            [(1, BASE), (2, "some totally different indexed text about engines")],
+        )
+        new_rows = [(100, BASE), (101, "unrelated fresh crawl content"), (102, BASE + " tail")]
+        new = _corpus(spark, new_rows)
+        src = str(tmp_path / "incoming")
+        new.repartition(2).write.parquet(src)
+        bands, sets = build_minhash_index(index, "text", "doc_id")
+        bands.count(), sets.count()  # the index's own state, before
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+
+        stream = (
+            spark.readStream.schema(new.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        streaming_index_dedup(
+            stream, "text", "doc_id", bands, sets,
+            out_path=str(tmp_path / "pairs"),
+            checkpoint=str(tmp_path / "ckpt"), threshold=0.6,
+        )
+        after = persistent().size()
+        release()
+        assert after == before
 
 
 class TestProfileTable:

@@ -18,9 +18,9 @@ from deepdb_public_spark.functions.text import fingerprint_md5, token_count
 from deepdb_public_spark.operators.dedup import (
     deduplicate_corpus,
     minhash_lsh_pairs,
-    release_cached,
 )
 from deepdb_public_spark.operators.filters import gopher_filter
+from deepdb_public_spark.operators.lifecycle import release
 from deepdb_public_spark.operators.sampling import hash_split, pack_sequences
 from deepdb_public_spark.operators.textstats import contamination_report
 from tests.conftest import SF_CORRECT
@@ -63,7 +63,7 @@ def test_pipeline_stages_compose(spark, corpus):
     )
     deduped = deduplicate_corpus(filtered, "doc_id", pairs).persist()
     n2 = deduped.count()
-    release_cached()
+    release()
     assert n2 < n1  # the planted duplicates are gone
     # no exact duplicate content survives
     fps = deduped.select(fingerprint_md5(F.col("text")).alias("fp"))

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from deepdb_public_spark.operators.dedup import (
     deduplicate_corpus,
     duplicate_clusters,
-    release_cached,
 )
+from deepdb_public_spark.operators.lifecycle import release
 from deepdb_public_spark.plans.query import Condition, Query
 from deepdb_public_spark.plans.schema import SchemaGraph, Table
 from deepdb_public_spark.spn.learn import LearnParams
@@ -88,7 +88,7 @@ def test_duplicate_clusters_and_corpus_dedup(spark):
     )
     kept = deduplicate_corpus(docs, "doc_id", pairs)
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 10, 20]
-    release_cached()
+    release()
 
 
 def test_fd_neq_excludes_null_bucket(spark):

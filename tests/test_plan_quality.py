@@ -77,9 +77,9 @@ def test_dedup_pair_generation_is_not_cross_join(engine):
     )
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
-    from deepdb_public_spark.operators.dedup import release_cached
+    from deepdb_public_spark.operators.lifecycle import release
 
-    release_cached()
+    release()
 
 
 def test_corpus_filters_are_pure_projections(engine):
@@ -119,8 +119,8 @@ def test_index_dedup_probe_has_no_cross_join(engine):
     from deepdb_public_spark.operators.dedup import (
         build_minhash_index,
         dedup_against_index,
-        release_cached,
     )
+    from deepdb_public_spark.operators.lifecycle import release
 
     docs = engine.catalog["documents"]
     bands, sets = build_minhash_index(
@@ -132,7 +132,7 @@ def test_index_dedup_probe_has_no_cross_join(engine):
         threshold=0.8, use_char_ngrams=True, ngram=5,
     )
     plan = _plan(pairs)
-    release_cached()
+    release()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -253,12 +253,13 @@ def test_tfidf_has_no_global_sort(engine):
 def test_semantic_dedup_scale_path_no_cross_join(engine):
     """semantic_dedup's LSH path: bucketed candidates only — the
     quadratic join exists solely behind brute_force=True."""
-    from deepdb_public_spark.operators.dedup import release_cached, semantic_dedup
+    from deepdb_public_spark.operators.dedup import semantic_dedup
+    from deepdb_public_spark.operators.lifecycle import release
 
     plan = _plan(
         semantic_dedup(engine.catalog["embeddings"], "embedding", "vec_id")
     )
-    release_cached()
+    release()
     assert "CartesianProduct" not in plan
 
 
@@ -322,8 +323,8 @@ def test_dense_index_probe_plan_shape(engine, spark):
         build_dense_index_verifier,
         build_minhash_index,
         dedup_against_index,
-        release_cached,
     )
+    from deepdb_public_spark.operators.lifecycle import release
 
     docs = engine.catalog["documents"]
     index = docs.filter(F.col("doc_id") % 5 != 0)
@@ -341,7 +342,7 @@ def test_dense_index_probe_plan_shape(engine, spark):
     )
     out.collect()
     plan = _plan(out)
-    release_cached()
+    release()
     assert "CartesianProduct" not in plan
     assert "bit_count" in plan  # bitmap verify, not array_intersect
     assert "array_intersect" not in plan

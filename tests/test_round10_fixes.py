@@ -45,8 +45,8 @@ def test_jaccard_prepared_equivalence(spark):
     from deepdb_public_spark.operators.dedup import (
         jaccard_pairs_exact,
         prepare_jaccard_corpus,
-        release_cached,
     )
+    from deepdb_public_spark.operators.lifecycle import release
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     base = sorted(
@@ -75,7 +75,7 @@ def test_jaccard_prepared_equivalence(spark):
                 assert set(via_prep) <= set(base)
                 assert all(p[2] >= 0.9 for p in via_prep)
     finally:
-        release_cached()
+        release()
 
 
 def test_bitmap_verify_broadcasts_index_side_only(spark):

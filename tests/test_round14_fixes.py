@@ -102,6 +102,30 @@ def test_lloyd_fit_multi_batched_equals_fused(spark, monkeypatch):
     assert fused == split
 
 
+def test_lloyd_fit_multi_rejects_malformed_vectors(spark):
+    """A cluster whose vectors are all shorter than dim sums to NULL
+    (element_at is NULL past the end with ANSI off), and a NaN element
+    sums to NaN: both must raise instead of yielding NaN centroids."""
+    from deepdb_public_spark.operators.similarity import _lloyd_fit_multi
+
+    short = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [10.0]), (2, [0.1, 0.1, 0.1]), (3, [10.2])],
+        "id long, v array<double>",
+    )
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match="finite"):
+            _lloyd_fit_multi(short, [(None, None, 2)], iters=2)
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    nan = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [0.1, float("nan")]), (3, [10.0, 10.0])],
+        "id long, v array<double>",
+    )
+    with pytest.raises(ValueError, match="finite"):
+        _lloyd_fit_multi(nan, [(None, None, 2)], iters=2)
+
+
 # ------------------------------- spread barrier as persist (r14)
 
 
@@ -110,12 +134,10 @@ def test_spread_barrier_blocks_pushdown(spark):
     downstream expressions below the repartition: the physical plan
     reads an InMemoryTableScan of the RAW columns and the expensive
     projection sits above it, on the spread partitioning."""
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-        spread_small_input,
-    )
+    from deepdb_public_spark.operators.lifecycle import release
+    from deepdb_public_spark.operators.partitioning import spread_small_input
 
-    release_local_checkpoints()
+    release()
     df = spark.range(100).coalesce(1).selectExpr(
         "id", "repeat('ab', 50) AS text"
     )
@@ -130,7 +152,7 @@ def test_spread_barrier_blocks_pushdown(spark):
     assert "InMemoryTableScan" in plan
     assert work.count() == 100
     # released persists are recomputable (unlike the old checkpoint)
-    assert release_local_checkpoints() >= 1
+    assert release() >= 1
     assert work.count() == 100
 
 
@@ -138,12 +160,10 @@ def test_spread_barrier_checkpoint_flavor(spark):
     """barrier="checkpoint" (the branch-heavy-consumer flavor) spreads
     to full parallelism, presents a leaf (Scan ExistingRDD) that AQE's
     stage cache can reuse exchanges above, and is tracked for release."""
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-        spread_small_input,
-    )
+    from deepdb_public_spark.operators.lifecycle import release
+    from deepdb_public_spark.operators.partitioning import spread_small_input
 
-    release_local_checkpoints()
+    release()
     df = spark.range(100).coalesce(1).selectExpr(
         "id", "repeat('ab', 50) AS text"
     )
@@ -153,7 +173,7 @@ def test_spread_barrier_checkpoint_flavor(spark):
     plan = work._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
     assert work.count() == 100
-    assert release_local_checkpoints() >= 1
+    assert release() >= 1
 
 
 # ---------------------------------- all-pairs cost gate (r14, V7)
@@ -184,6 +204,7 @@ def test_jaccard_pairs_branches_agree(spark):
     corpus must produce identical pair sets (the gate is purely a
     cost choice)."""
     from deepdb_public_spark.operators import dedup as D
+    from deepdb_public_spark.operators.lifecycle import release
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -199,7 +220,7 @@ def test_jaccard_pairs_branches_agree(spark):
             (r["id_a"], r["id_b"], round(r["jaccard"], 9))
             for r in out.collect()
         )
-        D.release_cached()
+        release()
         return rows
 
     orig = D._allpairs_beats_prefix

@@ -299,17 +299,15 @@ class TestOperatorReviewFixes:
             minhash_lsh_pairs(docs, "text", "doc_id", n_hashes=32, n_bands=10)
 
     def test_jaccard_exact_skips_empty_docs(self, spark):
-        from deepdb_public_spark.operators.dedup import (
-            jaccard_pairs_exact,
-            release_cached,
-        )
+        from deepdb_public_spark.operators.dedup import jaccard_pairs_exact
+        from deepdb_public_spark.operators.lifecycle import release
 
         docs = spark.createDataFrame(
             [(1, "   "), (2, ""), (3, "real words here")],
             "doc_id long, text string",
         )
         pairs = jaccard_pairs_exact(docs, "text", "doc_id", threshold=0.5).collect()
-        release_cached()
+        release()
         assert pairs == []  # no bogus jaccard-1.0 pair for (1, 2)
 
     def test_embedding_neardup_empty_input(self, spark):

@@ -25,10 +25,8 @@ def test_minhash_prefilter_knob_equivalent_output(spark):
     """prefilter True / False / adaptive must produce the same verified
     pair set on the fixture corpus (the prefilter only removes
     candidates the exact verify would reject anyway)."""
-    from deepdb_public_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_cached,
-    )
+    from deepdb_public_spark.operators.dedup import minhash_lsh_pairs
+    from deepdb_public_spark.operators.lifecycle import release
 
     docs = _docs(spark)
     results = []
@@ -40,7 +38,7 @@ def test_minhash_prefilter_knob_equivalent_output(spark):
                 n_bands=16, use_char_ngrams=True, ngram=5, prefilter=knob,
             ).collect()
         }
-        release_cached()
+        release()
         results.append(got)
     assert results[0] == results[1] == results[2]
     assert len(results[0]) > 0  # fixture has near-dups
@@ -50,10 +48,8 @@ def test_minhash_adaptive_skips_below_threshold(spark):
     """On a tiny corpus the adaptive path must SKIP the prefilter
     (candidate count < prefilter_min_candidates) and still verify
     exactly — same output as prefilter=False."""
-    from deepdb_public_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_cached,
-    )
+    from deepdb_public_spark.operators.dedup import minhash_lsh_pairs
+    from deepdb_public_spark.operators.lifecycle import release
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog again and again"),
@@ -68,37 +64,32 @@ def test_minhash_adaptive_skips_below_threshold(spark):
             use_char_ngrams=True, ngram=5,
         ).collect()
     }
-    release_cached()
+    release()
     assert out == {(1, 2)}
 
 
 # --------------------------------------- localCheckpoint release hook
 
 
-def test_release_local_checkpoints_frees_blocks(spark):
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-        spread_small_input,
-    )
+def test_release_frees_spread_blocks(spark):
+    from deepdb_public_spark.operators.lifecycle import release
+    from deepdb_public_spark.operators.partitioning import spread_small_input
 
-    release_local_checkpoints(spark)  # clean slate
+    release()  # clean slate
     out = spread_small_input(spark.range(100).coalesce(1))
     assert out.count() == 100  # materializes the lazy checkpoint
-    assert release_local_checkpoints(spark) >= 1
-    assert release_local_checkpoints(spark) == 0  # idempotent
+    assert release() >= 1
+    assert release() == 0  # idempotent
 
 
-def test_release_cached_also_releases_checkpoints(spark):
-    from deepdb_public_spark.operators.dedup import release_cached
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-        spread_small_input,
-    )
+def test_release_leaves_no_registered_state(spark):
+    from deepdb_public_spark.operators.lifecycle import release
+    from deepdb_public_spark.operators.partitioning import spread_small_input
 
-    release_local_checkpoints(spark)
+    release()
     spread_small_input(spark.range(50).coalesce(1)).count()
-    release_cached()
-    assert release_local_checkpoints(spark) == 0  # already freed
+    release()
+    assert release() == 0  # already freed
 
 
 # ------------------------------------------- sample-CI correction

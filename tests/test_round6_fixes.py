@@ -4,7 +4,7 @@
   instead of silently falling back to the 0.95 z.
 - CI rows expose the UNCLAMPED sd so the ensemble's OR composition
   never reconstructs an understated sd from a lo>=0-clamped interval.
-- release_local_checkpoints only touches checkpoints THIS package
+- lifecycle.release only touches checkpoints THIS package
   created (no session-wide sweep of foreign checkpoints).
 - IvfIndex.maintain_saved survives a degenerate hot cell (duplicate
   vectors -> KMeans leaves sub-clusters empty) without duplicating
@@ -84,19 +84,17 @@ def test_ci_rows_carry_unclamped_sd(spark):
 
 def test_release_spares_foreign_local_checkpoints(spark):
     """A localCheckpoint created by USER code must survive
-    release_local_checkpoints() — the round-5 advice scenario: an
+    release() — the round-5 advice scenario: an
     unmaterialized foreign DataFrame whose lineage is truncated would
     become unrecomputable if the package swept it."""
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-        spread_small_input,
-    )
+    from deepdb_public_spark.operators.lifecycle import release
+    from deepdb_public_spark.operators.partitioning import spread_small_input
 
-    release_local_checkpoints()  # clean slate
+    release()  # clean slate
     foreign = spark.range(200).withColumn("x", F.col("id") * 2).localCheckpoint()
     ours = spread_small_input(spark.range(100).coalesce(1))
     ours.count()
-    assert release_local_checkpoints() >= 1
+    assert release() >= 1
     # the foreign checkpoint is untouched: still marked, still usable
     assert foreign.count() == 200
     jrdd = foreign._jdf.queryExecution().analyzed().rdd()
@@ -106,17 +104,12 @@ def test_release_spares_foreign_local_checkpoints(spark):
 
 def test_release_covers_dedup_internal_checkpoints(spark):
     """dup_clusters' label-propagation checkpoints are registered and
-    freed by release_cached(), leaving zero locally-checkpointed RDDs
+    freed by release(), leaving zero locally-checkpointed RDDs
     created by the package behind."""
-    from deepdb_public_spark.operators.dedup import (
-        duplicate_clusters,
-        release_cached,
-    )
-    from deepdb_public_spark.operators.partitioning import (
-        release_local_checkpoints,
-    )
+    from deepdb_public_spark.operators.dedup import duplicate_clusters
+    from deepdb_public_spark.operators.lifecycle import release
 
-    release_local_checkpoints()
+    release()
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)] + [(1, 3), (5, 7)],
         "id_a int, id_b int",
@@ -124,9 +117,9 @@ def test_release_covers_dedup_internal_checkpoints(spark):
     # driver_max_edges=0 forces the distributed label-propagation path,
     # the one that creates localCheckpoints every round
     duplicate_clusters(pairs, driver_max_edges=0).count()
-    release_cached()
+    release()
     # everything the package checkpointed was already freed
-    assert release_local_checkpoints() == 0
+    assert release() == 0
 
 
 # ----------------------- IVF maintenance with degenerate hot cells

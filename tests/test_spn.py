@@ -272,3 +272,18 @@ def test_remove_counts_matches_dict_reference():
             leaf.probs, np.array([m / ref_total for _, m in items])
         )
         assert leaf.null_prob == null_mass / ref_total
+
+
+def test_remove_counts_sums_duplicate_values():
+    """Duplicate delta values subtract their summed count: one call
+    with [v, v] equals removing each count in turn, including when
+    the second removal clamps at zero."""
+    for a, b in ((10.0, 5.0), (20.0, 10.0)):
+        both = Leaf(0, np.array([1.0, 2.0, 3.0]), np.array([0.5, 0.25, 0.25]))
+        total = both.remove_counts(np.array([2.0, 2.0]), np.array([a, b]), 0.0, 100.0)
+        seq = Leaf(0, np.array([1.0, 2.0, 3.0]), np.array([0.5, 0.25, 0.25]))
+        mid = seq.remove_counts(np.array([2.0]), np.array([a]), 0.0, 100.0)
+        seq_total = seq.remove_counts(np.array([2.0]), np.array([b]), 0.0, mid)
+        assert total == pytest.approx(seq_total)
+        np.testing.assert_array_equal(both.values, seq.values)
+        np.testing.assert_allclose(both.probs, seq.probs)

@@ -336,9 +336,9 @@ def main() -> None:
 
     from deepdb_public_spark.operators.dedup import (
         minhash_lsh_pairs,
-        release_cached,
         semantic_dedup,
     )
+    from deepdb_public_spark.operators.lifecycle import release
 
     emb = entry._engine(spark, sf).catalog["embeddings"]
     sd = semantic_dedup(emb, "embedding", "vec_id", threshold=0.8)
@@ -353,7 +353,7 @@ def main() -> None:
             _fmt(sd),
         )
     )
-    release_cached()
+    release()
 
     docs = entry._engine(spark, sf).catalog["documents"]
     mh = minhash_lsh_pairs(
@@ -369,7 +369,7 @@ def main() -> None:
             _fmt(mh),
         )
     )
-    release_cached()
+    release()
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(

@@ -1,6 +1,6 @@
 """Per-entry profiler for the optimization rounds (guide §1: measure
 first). For each named entry, replicate bench.py's methodology (warm
-engine, first run excluded, timed reps with release_cached between),
+engine, first run excluded, timed reps with lifecycle.release between),
 but with the Spark UI enabled so the REST API yields a per-job
 breakdown: how many jobs a rep launches and where its wall time goes.
 
@@ -64,7 +64,7 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     import __spark_entry__ as entry_mod
-    from deepdb_public_spark.operators.dedup import release_cached
+    from deepdb_public_spark.operators.lifecycle import release
 
     queries = entry_mod.queries()
     names = [n for n in queries if any(n.startswith(p) for p in prefixes)]
@@ -82,7 +82,7 @@ def main() -> None:
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).collect()
         first = time.perf_counter() - t0
-        release_cached()
+        release()
         rep_times = []
         rep_jobs = []
         for rep in range(reps):
@@ -91,7 +91,7 @@ def main() -> None:
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).collect()
             rep_times.append(time.perf_counter() - t0)
-            release_cached()
+            release()
             after = _jobs(ui_port)
             new = [j for j in after if j["jobId"] not in before]
             rep_jobs.append(new)

@@ -35,8 +35,8 @@ def main() -> None:
         dedup_against_index,
         duplicate_clusters,
         minhash_lsh_pairs,
-        release_cached,
     )
+    from deepdb_public_spark.operators.lifecycle import release
     from deepdb_public_spark.operators.chunking import chunk_documents
     from deepdb_public_spark.operators.curation import curate_corpus
     from deepdb_public_spark.operators.dedup import semantic_dedup
@@ -292,18 +292,18 @@ def main() -> None:
     warm.count()
     for fn in OPS.values():
         fn(warm)
-        release_cached()
+        release()
     warm.unpersist()
     warm_e = emb_corpus(1).persist()
     warm_e.count()
     for fn in OPS_EMB.values():
         fn(warm_e)
-        release_cached()
+        release()
     warm2 = corpus(1).persist()
     warm2.count()
     for fn in OPS_BOTH.values():
         fn(warm2, warm_e)
-        release_cached()
+        release()
     warm2.unpersist()
     warm_e.unpersist()
 
@@ -317,7 +317,7 @@ def main() -> None:
             t0 = time.perf_counter()
             out_n = fn(*args)
             best = min(best, time.perf_counter() - t0)
-            release_cached()
+            release()
         return best, out_n
 
     for k in scales:
@@ -353,8 +353,8 @@ def main() -> None:
         best, out_n, rounds, n_pairs = float("inf"), 0, 0, 0
         for _rep in range(2):
             # rebuild the pair graph fresh each rep: duplicate_clusters
-            # unpersists its input when done and release_cached() drops
-            # the generator's tracked localCheckpoints, so a shared
+            # unpersists its input when done and release() drops
+            # the generator's registered localCheckpoints, so a shared
             # handle cannot be recomputed on the second rep
             pr = minhash_lsh_pairs(
                 d, "text", "doc_id", threshold=0.8, n_hashes=64, n_bands=16,
@@ -367,7 +367,7 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
             rounds = st["rounds"]
             assert st["branch"] == "distributed", st
-            release_cached()
+            release()
         assert rounds <= 5, (
             f"label propagation took {rounds} rounds at {k}x — the "
             "near-dup star-topology bound (<=5) no longer holds"
