@@ -13,6 +13,8 @@ Mirrors the reference's maqp.py entry point split into a library API
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans.compiler import ExactCompiler
@@ -20,6 +22,7 @@ from .plans.parser import parse_query
 from .plans.query import Query
 from .plans.schema import SchemaGraph, tpch_like_schema
 from .sources.catalog import load_tables
+from .spn.model import GroupByExplosion, ModelPlaneUnsupported
 
 
 def default_session(app_name: str = "deepdb_public_spark", cpus: str = "*") -> SparkSession:
@@ -88,6 +91,10 @@ class Engine:
         self.catalog = load_tables(spark, sf_dir, tables=sorted(self.schema.tables))
         self.compiler = ExactCompiler(self.schema, self.catalog)
         self.ensemble = None  # set by spn.train / spn.ensemble loaders
+        # estimate hints the ensemble could not price, keyed by
+        # (estimator, exception type): each count is one plan decision
+        # that fell back to no broadcast hint / greedy join order
+        self.hint_fallbacks: Counter[tuple[str, str]] = Counter()
 
     def refresh_views(self) -> None:
         """Re-register this engine's tables as temp views. Views are
@@ -122,8 +129,6 @@ class Engine:
         if self.ensemble is None:
             raise RuntimeError("no ensemble trained/loaded — see spn.train")
         ir = self.parse(q) if isinstance(q, str) else q
-        from .spn.model import GroupByExplosion, ModelPlaneUnsupported
-
         try:
             return self.ensemble.answer(ir)
         except (GroupByExplosion, ModelPlaneUnsupported):
@@ -135,20 +140,24 @@ class Engine:
         """Feed RSPN cardinality estimates to the exact plane as join
         hints (DeepDB's optimizer-integration story, SURVEY.md §4.3):
         a filtered fact table predicted small gets broadcast instead
-        of shuffled."""
+        of shuffled. An estimate the ensemble cannot give (ValueError
+        or KeyError) is counted in ``hint_fallbacks``; that plan step
+        then gets no broadcast hint / the greedy join order."""
         if self.ensemble is None:
             raise RuntimeError("train or load an ensemble first")
 
-        def estimator(table: str, query: Query):
-            from .plans.query import Query as Q
+        def fallback(estimator: str, exc: Exception) -> None:
+            self.hint_fallbacks[(estimator, type(exc).__name__)] += 1
 
-            sub = Q(
+        def estimator(table: str, query: Query):
+            sub = Query(
                 table_set={table},
                 conditions=[c for c in query.conditions if c.table == table],
             )
             try:
                 return self.ensemble.cardinality(sub)
-            except (ValueError, KeyError):
+            except (ValueError, KeyError) as e:
+                fallback("table", e)
                 return None
 
         self.compiler.cardinality_estimator = estimator
@@ -158,15 +167,13 @@ class Engine:
             conditions and FK edges restricted to `tables` — one
             definition for the scalar AND batch estimators (they used
             to carry verbatim copies)."""
-            from .plans.query import Query as Q
-
             rel_ids = {
                 rid
                 for rid in query.relationship_set
                 if self.schema.relationships[rid].start in tables
                 and self.schema.relationships[rid].end in tables
             }
-            return Q(
+            return Query(
                 table_set=set(tables),
                 relationship_set=rel_ids,
                 conditions=[c for c in query.conditions if c.table in tables],
@@ -180,7 +187,8 @@ class Engine:
             then falls back to greedy."""
             try:
                 return self.ensemble.cardinality(_dp_sub_query(tables, query))
-            except (ValueError, KeyError):
+            except (ValueError, KeyError) as e:
+                fallback("join", e)
                 return None
 
         self.compiler.join_cardinality_estimator = join_estimator
@@ -197,23 +205,27 @@ class Engine:
                 sub = _dp_sub_query(ts, query)
                 try:
                     m = self.ensemble.select_model(sub)
-                except ValueError:
+                except ValueError as e:
+                    fallback("join_batch", e)
                     try:
                         out[j] = self.ensemble.cardinality(sub)
-                    except (ValueError, KeyError):
+                    except (ValueError, KeyError) as e2:
+                        fallback("join_batch", e2)
                         out[j] = None
                     continue
                 groups.setdefault(id(m), (m, []))[1].append((j, sub))
             for m, items in groups.values():
                 try:
                     vals = m.cardinality_many([s for _j, s in items])
-                except (ValueError, KeyError):
+                except (ValueError, KeyError) as e:
+                    fallback("join_batch", e)
                     vals = None
                 if vals is None:
                     for j, s in items:
                         try:
                             out[j] = self.ensemble.cardinality(s)
-                        except (ValueError, KeyError):
+                        except (ValueError, KeyError) as e:
+                            fallback("join_batch", e)
                             out[j] = None
                 else:
                     for (j, _s), v in zip(items, vals):

@@ -157,12 +157,16 @@ def perturb(sql: str, rng: random.Random) -> str:
     return "".join(out)
 
 
-def corpus() -> list[str]:
+def _templates() -> list[str]:
     base = []
     for rel in CORPORA:
         with open(os.path.join(ROOT, rel)) as f:
             base.extend(line.strip() for line in f if line.strip())
-    base += EXTRA
+    return base + EXTRA
+
+
+def corpus() -> list[str]:
+    base = _templates()
     rng = random.Random(20261019)
     out = list(base)
     for _ in range(PERTURBED_COPIES):
@@ -193,7 +197,9 @@ def test_golden_ir_reproduced_byte_for_byte():
 
 def test_golden_covers_every_template():
     sqls = {e["sql"] for e in _golden_entries()}
-    assert set(corpus()[: len(corpus()) // (PERTURBED_COPIES + 1)]) <= sqls
+    templates = corpus()[: len(_templates())]
+    assert len(templates) == 189 + len(EXTRA)
+    assert set(templates) <= sqls
 
 
 if __name__ == "__main__":
