@@ -24,6 +24,12 @@ from .plans.schema import SchemaGraph, tpch_like_schema
 from .sources.catalog import load_tables
 from .spn.model import GroupByExplosion, ModelPlaneUnsupported
 
+# Bound of an Engine's parse memo, in distinct SQL texts. perfbench's
+# ``estimate`` stream reads 2,799 distinct texts a write cycle (80.7% of
+# its reads repeat an earlier text exactly); past the bound the memo
+# empties and refills.
+PARSE_MEMO_MAX = 4096
+
 
 def default_session(app_name: str = "deepdb_public_spark", cpus: str = "*") -> SparkSession:
     """local[] session tuned for the fixture scale; on a real cluster
@@ -95,6 +101,9 @@ class Engine:
         # (estimator, exception type): each count is one plan decision
         # that fell back to no broadcast hint / greedy join order
         self.hint_fallbacks: Counter[tuple[str, str]] = Counter()
+        # SQL text -> Query IR of every successful parse (see parse)
+        self._parse_memo: dict[str, Query] = {}
+        self.parse_hits = self.parse_misses = 0
 
     def refresh_views(self) -> None:
         """Re-register this engine's tables as temp views. Views are
@@ -110,7 +119,20 @@ class Engine:
         return self.spark.sql(q)
 
     def parse(self, q: str) -> Query:
-        return parse_query(q, self.schema)
+        """The Query IR of ``q``, memoized on the exact text: a repeated
+        read costs one dict lookup. The IR is shared by every caller
+        that parsed the same text, so it is read-only; malformed text
+        is never stored and raises every time."""
+        ir = self._parse_memo.get(q)
+        if ir is not None:
+            self.parse_hits += 1
+            return ir
+        ir = parse_query(q, self.schema)
+        self.parse_misses += 1
+        if len(self._parse_memo) >= PARSE_MEMO_MAX:
+            self._parse_memo.clear()
+        self._parse_memo[q] = ir
+        return ir
 
     def query(self, q: str | Query) -> DataFrame:
         ir = self.parse(q) if isinstance(q, str) else q

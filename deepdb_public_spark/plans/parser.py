@@ -253,7 +253,8 @@ def _is_iso_date(value: str) -> bool:
 def _parse_literal(text: str):
     first = text[:1]
     if first in ("'", '"') and text.endswith(first):
-        return text[1:-1]
+        # a doubled quote inside the literal is one quote character
+        return text[1:-1].replace(first * 2, first)
     if first in ("D", "d"):
         m = _DATE_LITERAL_RE.match(text)
         if m:

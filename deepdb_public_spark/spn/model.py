@@ -116,6 +116,25 @@ def _square(x: np.ndarray) -> np.ndarray:
 # feature functions the cache can key on (named, stateless)
 _FEATURE_NAMES = {_inv_max1: "inv", _identity: "id", _square: "sq"}
 
+# factor-cache bound, in entries per model: point values and (value,
+# variance) pairs together. perfbench's ``estimate`` stream leaves
+# about 2,700 entries over its five models per write cycle; past the
+# bound the cache empties and refills.
+EVAL_CACHE_MAX = 8192
+
+
+def _factor_key(cond: dict[int, Range], features) -> tuple | None:
+    """Canonical factor-cache key of one tree walk's (cond, features);
+    None when a feature function has no name to key on."""
+    try:
+        fkey = tuple(
+            sorted((i, _FEATURE_NAMES[f]) for i, f in (features or {}).items())
+        )
+    except KeyError:
+        return None
+    return (tuple(sorted((i, range_key(r)) for i, r in cond.items())), fkey)
+
+
 # group-by grid cap: the model-side combination grid is the cross
 # product of the grouped columns' domains; past this many cells the
 # vectorized pass stops paying for itself and the grid alone risks
@@ -174,27 +193,60 @@ class SPNModel:
     fd_maps: dict = field(default_factory=dict)
     # factor cache (B13, reference: IndicatorExpectation.__hash__ +
     # memoization in spn_ensemble.py): repeated expectation factors —
-    # factorization denominators, workload re-runs — hit the cache
-    # instead of re-walking the tree. Invalidated on incremental
-    # updates.
+    # factorization denominators, workload re-runs, repeated CIs — hit
+    # the cache instead of re-walking the tree. Holds at most
+    # EVAL_CACHE_MAX entries; invalidated on incremental updates. Not
+    # pickled (__getstate__), nor are the hit/miss counters.
     _eval_cache: dict = field(default_factory=dict, repr=False, compare=False)
+    cache_hits: int = field(default=0, repr=False, compare=False)
+    cache_misses: int = field(default=0, repr=False, compare=False)
 
-    def _eval(self, cond: dict[int, Range], features=None) -> float:
-        try:
-            fkey = tuple(
-                sorted((i, _FEATURE_NAMES[f]) for i, f in (features or {}).items())
-            )
-        except KeyError:  # unnamed feature fn: don't cache
-            return evaluate(self.root, cond, features)
-        key = (tuple(sorted((i, range_key(r)) for i, r in cond.items())), fkey)
-        hit = self._eval_cache.get(key)
-        if hit is None:
-            hit = evaluate(self.root, cond, features)
-            self._eval_cache[key] = hit
-        return hit
+    def _eval(self, cond: dict[int, Range], features=None, moments: bool = False):
+        """E[prod features * 1(cond)] from one tree walk, served from
+        the factor cache when the same factor was walked before. With
+        ``moments`` it is the (value, sampling variance) pair of the
+        per-node variance pass (B10), cached under the same key plus a
+        tag."""
+        key = _factor_key(cond, features)
+        if key is not None:
+            if moments:
+                key += ("var",)
+            hit = self._eval_cache.get(key)
+            if hit is not None:
+                self.cache_hits += 1
+                return hit
+        if moments:
+            # looked up at call time, like ``evaluate``: a tracer
+            # patches the nodes-module name
+            from .nodes import evaluate_with_variance
+
+            val = evaluate_with_variance(self.root, cond, features)
+        else:
+            val = evaluate(self.root, cond, features)
+        self.cache_misses += 1
+        if key is not None:
+            if len(self._eval_cache) >= EVAL_CACHE_MAX:
+                self._eval_cache.clear()
+            self._eval_cache[key] = val
+        return val
 
     def invalidate_cache(self) -> None:
+        """Drop every cached factor, point values and variance pairs
+        alike: the one path that keeps the cache true to the tree."""
         self._eval_cache.clear()
+
+    def __getstate__(self) -> dict:
+        # derived caches stay out of the pickle: its size must not
+        # grow with the number of reads already answered
+        state = dict(self.__dict__)
+        for k in ("_eval_cache", "_col_index_map", "cache_hits", "cache_misses"):
+            state.pop(k, None)
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._eval_cache = {}
+        self.cache_hits = self.cache_misses = 0
 
     def _build_axes(
         self, cond: dict, idxs: list[int], what: str
@@ -548,8 +600,8 @@ class SPNModel:
         self, sub_query: Query, rel: Relationship, with_conditions: bool
     ) -> tuple[dict, dict]:
         """(cond, feats) for the fanout-weighted expectation — shared
-        by the value path (_weighted_expectation, memoized) and the
-        variance path (_weighted_expectation_moments, per-node)."""
+        by the value path (_weighted_expectation) and the variance
+        path (_weighted_expectation_moments), both memoized."""
         cond = self.conditions_to_ranges(sub_query) if with_conditions else {}
         extra, features = self.correction_factors(sub_query)
         for i, r in extra.items():
@@ -592,22 +644,18 @@ class SPNModel:
         expectation via the per-node variance pass — the B10 machinery
         applied to a B11 factor term, so multi-model OR CIs can
         propagate each factor's uncertainty through the product."""
-        from .nodes import evaluate_with_variance
-
         cond, feats = self._wexp_args(sub_query, rel, with_conditions)
-        return evaluate_with_variance(self.root, cond, feats)
+        return self._eval(cond, feats, moments=True)
 
     def _card_moments(self, query: Query) -> tuple[float, float]:
         """(p, var_p) of the query's indicator expectation —
         cardinality = full_join_size * p; var_p from the per-node
         variance pass (B10). Relative variance var_p/p**2 is scale-
         free, which is what factor-chain composition needs."""
-        from .nodes import evaluate_with_variance
-
         cond = self.conditions_to_ranges(query)
         extra, features = self.correction_factors(query)
         cond.update(extra)
-        return evaluate_with_variance(self.root, cond, features)
+        return self._eval(cond, features, moments=True)
 
     def fanout_conditional_factor(
         self, nom_query: Query, rel: Relationship, denom_query: Query
@@ -1083,10 +1131,8 @@ class SPNModel:
     def _ci_rows(
         self, query: Query, cond: dict[int, Range], features, z: float
     ) -> list[dict]:
-        from .nodes import evaluate_with_variance
-
         N = self.full_join_size
-        p, var_p = evaluate_with_variance(self.root, cond, features)
+        p, var_p = self._eval(cond, features, moments=True)
         out = []
         for op in query.aggregations:
             if op.op_type is not AggregationOperationType.AGGREGATION:
@@ -1121,13 +1167,13 @@ class SPNModel:
             feats1 = dict(features)
             for _t, c in op.operands:
                 feats1[self._col_index(c)] = _identity
-            ex, var_ex = evaluate_with_variance(self.root, cond, feats1)
+            ex, var_ex = self._eval(cond, feats1, moments=True)
             if op.agg_type is AggregationType.SUM:
                 est = N * ex
                 half = z * N * float(np.sqrt(max(var_ex, 0.0)))
             else:  # AVG = E[x1]/E[1(x not null)]: delta method on ratio
-                pn, var_pn = evaluate_with_variance(
-                    self.root, self._notnull_cond(cond, op.operands), features
+                pn, var_pn = self._eval(
+                    self._notnull_cond(cond, op.operands), features, moments=True
                 )
                 est = ex / pn if pn > 0 else float("nan")
                 p2 = max(pn, 1e-12)

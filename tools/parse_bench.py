@@ -10,8 +10,12 @@ so both numbers see the same host state:
     python tools/parse_bench.py --against /path/to/parent/checkout
 
 Only ``deepdb_public_spark/plans`` of each checkout is imported (it
-needs no Spark). The report, with host context, goes to
-PARSE_BENCH.json.
+needs no Spark). ``parse_query`` itself keeps no memo, so these
+numbers are the parser's. The report also holds the cost of a hit in
+this checkout's ``Engine.parse`` memo (every perturbed query parsed
+once, then timed again, minimum over the passes) and the share of the
+perturbed stream whose exact text repeats an earlier query. It goes,
+with host context, to PARSE_BENCH.json.
 """
 
 from __future__ import annotations
@@ -107,6 +111,15 @@ def host() -> dict:
     }
 
 
+def perturbed_stream() -> list[str]:
+    base = templates()
+    return [
+        perturb(t, np.random.default_rng([k, j]))
+        for k in range(PERTURBATIONS)
+        for j, t in enumerate(base)
+    ]
+
+
 def load_parser(root: str, alias: str):
     """(parse_query, schema) from ``root``'s plans package, imported
     under ``alias`` so two checkouts load side by side."""
@@ -124,11 +137,7 @@ def load_parser(root: str, alias: str):
 
 def measure(roots: dict[str, str]) -> dict:
     base = templates()
-    queries = [
-        perturb(t, np.random.default_rng([k, j]))
-        for k in range(PERTURBATIONS)
-        for j, t in enumerate(base)
-    ]
+    queries = perturbed_stream()
     parsers = {label: load_parser(root, f"_plans_{label}") for label, root in roots.items()}
     passes: dict[str, list[float]] = {label: [] for label in parsers}
     chunks = [queries[k: k + len(base)] for k in range(0, len(queries), len(base))]
@@ -156,6 +165,34 @@ def measure(roots: dict[str, str]) -> dict:
     } | {"templates": len(base), "parses_per_pass": len(queries)}
 
 
+def measure_memo(queries: list[str]) -> dict:
+    """CPU time per ``Engine.parse`` memo hit in this checkout. The
+    Engine is built without Spark: parse needs only the schema and
+    the memo, which ``Engine.__init__`` would create next to a Spark
+    catalog."""
+    sys.path.insert(0, HERE)
+    from deepdb_public_spark.engine import Engine
+    from deepdb_public_spark.plans.schema import tpch_like_schema
+
+    engine = object.__new__(Engine)
+    engine.schema, engine._parse_memo = tpch_like_schema(), {}
+    engine.parse_hits = engine.parse_misses = 0
+    for q in queries:  # the misses: every distinct text once
+        engine.parse(q)
+    passes = []
+    for _ in range(PASSES):
+        t0 = time.thread_time()
+        for q in queries:
+            engine.parse(q)
+        passes.append((time.thread_time() - t0) / len(queries) * 1e3)
+    distinct = len(set(queries))
+    assert engine.parse_misses == distinct, "a timed Engine.parse call missed the memo"
+    return {
+        "memo_hit_ms_per_call": round(min(passes), 6),
+        "exact_repeat_share": round(1 - distinct / len(queries), 4),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--against", help="a second checkout (e.g. the parent commit) to measure alongside")
@@ -164,7 +201,7 @@ def main() -> None:
     roots = {"change": HERE}
     if args.against:
         roots = {"parent": args.against, "change": HERE}
-    report = measure(roots)
+    report = measure(roots) | measure_memo(perturbed_stream())
     if args.against:
         report["change_over_parent"] = round(
             report["change"]["parse_ms_per_call"] / report["parent"]["parse_ms_per_call"], 4
@@ -178,6 +215,8 @@ def main() -> None:
         print(f"{label}: {report[label]['parse_ms_per_call']:.4f} ms per parse_query call")
     if args.against:
         print(f"change / parent: {report['change_over_parent']:.3f}")
+    print(f"memo hit: {report['memo_hit_ms_per_call']:.6f} ms per Engine.parse call; "
+          f"exact-text repeats: {report['exact_repeat_share']:.1%} of the stream")
 
 
 if __name__ == "__main__":
