@@ -127,7 +127,7 @@ _IR_QUERIES: dict[str, str] = {
     # CROSS-COLUMN OR through the IR path — exact plane compiles the
     # filter + countDistinct; the model-plane twin signs per-(group,
     # value) masses across inclusion-exclusion terms
-    # (SPNEnsemble._ie_grouped_distinct_count,
+    # (SPNEnsemble._signed_masses,
     # tests/test_round6_fixes.py)
     "q41_count_distinct_or_group": (
         "SELECT lineitem.l_returnflag, "
@@ -2996,7 +2996,7 @@ def _m_or_avg_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot shrink the interval below nominal coverage. Round 8 adds a
     'cd:all' row: ungrouped COUNT(DISTINCT) under the same OR gets
     Poisson-occupancy moments over the signed per-value masses
-    (SPNEnsemble._distinct_occupancy_moments) — the 0.99 interval must
+    (SPNEnsemble._occupancy_moments) — the 0.99 interval must
     cover the exact distinct count and the CI's point estimate must
     equal the aqp threshold estimate."""
     eng = _engine(spark, sf_dir)

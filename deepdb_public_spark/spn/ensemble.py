@@ -18,14 +18,35 @@ new tables' conditions / denominator without, the reference's
 
 from __future__ import annotations
 
+import functools
+import itertools
+import math
 import pickle
+from collections import Counter
 
+import numpy as np
 from pyspark.sql import DataFrame
 
-from ..plans.query import Query, QueryType
+from ..plans.query import (
+    AggOperation,
+    AggregationOperationType,
+    AggregationType,
+    Condition,
+    Query,
+    QueryType,
+)
 from ..plans.schema import SchemaGraph
 from .learn import LearnParams
-from .model import SPNModel
+from .model import (
+    MAX_GROUPBY_CELLS,
+    GroupByExplosion,
+    ModelPlaneUnsupported,
+    SPNModel,
+    _apply_having,
+    _fold_aggregates,
+    z_value,
+)
+from .nodes import iter_leaves
 from .trainer import train_spn_model
 
 # Cross-piece grouped estimates price EVERY group key with its own
@@ -33,6 +54,41 @@ from .trainer import train_spn_model
 # covering anchor's one-pass grid — so their grid cap is much tighter
 # than model-side MAX_GROUPBY_CELLS (~10s worst case at 10k).
 MAX_CROSS_PIECE_CELLS = 10_000
+
+
+def _with_conditions(query: Query, extra: list) -> Query:
+    """COUNT over ``query``'s tables and joins under its conditions
+    plus ``extra``: the chain every scaled or group-pinned factorized
+    estimate counts through."""
+    return Query(
+        query_type=QueryType.CARDINALITY,
+        table_set=set(query.table_set),
+        relationship_set=set(query.relationship_set),
+        conditions=list(query.conditions) + list(extra),
+    )
+
+
+def _single_aggregate(
+    base: Query, agg_type, operands, group_bys=(), extra=()
+) -> Query:
+    """``base``'s tables, joins and conditions (plus ``extra``) asking
+    ONE aggregate aliased ``v`` per group of ``group_bys``: the
+    sub-answer every composed estimate reads back by name."""
+    return Query(
+        query_type=base.query_type,
+        table_set=set(base.table_set),
+        relationship_set=set(base.relationship_set),
+        conditions=list(base.conditions) + list(extra),
+        group_bys=list(group_bys),
+        aggregations=[
+            AggOperation(
+                AggregationOperationType.AGGREGATION,
+                agg_type,
+                list(operands or []),
+                alias="v",
+            )
+        ],
+    )
 
 
 class SPNEnsemble:
@@ -241,13 +297,7 @@ class SPNEnsemble:
         conditions — the scaling chain every grouped/per-value
         factorized estimate divides through (one definition; four call
         sites used to copy it)."""
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions) + list(extra or []),
-        )
-        return float(self.cardinality(qc))
+        return float(self.cardinality(_with_conditions(query, extra or [])))
 
     def _grouped_anchor(self, query: Query, need: set, component):
         """Best (model, piece) covering every table in ``need`` inside
@@ -374,12 +424,17 @@ class SPNEnsemble:
         first: SPNModel,
         covered: set[str],
         trace: list | None = None,
-        return_moments: bool = False,
-    ):
-        """Evaluate one factorization variant: the first model answers
-        its piece, then each frontier FK edge multiplies in a
-        conditional factor (reference: evaluate_factors). ``trace``
-        collects one dict per factor (explain_factors).
+    ) -> float:
+        """Evaluate one factorization variant (see _factor_chain);
+        ``trace`` collects one dict per factor (explain_factors)."""
+        return self._evaluate_steps(*self._factor_chain(query, first, covered), trace)
+
+    def _factor_chain(
+        self, query: Query, first: SPNModel, covered: set[str]
+    ) -> tuple[list[dict], int]:
+        """One factorization variant as symbolic steps: the first model
+        answers its piece, then each frontier FK edge multiplies in a
+        conditional factor (reference: evaluate_factors).
 
         Factors are collected SYMBOLICALLY first — each step
         contributes nominator/denominator terms keyed by (model, kind,
@@ -392,7 +447,9 @@ class SPNEnsemble:
         the chain anchor reappearing in a later denominator used to
         turn the whole product into 0 * (0/0-guard) = 0, while the
         cancelled form keeps the meaningful remainder. It also skips
-        the cancelled evaluations entirely."""
+        the cancelled evaluations entirely. Returns the steps with only
+        their surviving terms, and the number of cancelled pairs
+        (_cancel_factors)."""
         q_tables = set(query.table_set)
         cond_tables = {c.table for c in query.conditions}
         q_rels, component, sub_query = self._query_graph(query)
@@ -612,29 +669,47 @@ class SPNEnsemble:
             covered |= D
             for t in D:
                 piece_of[t] = (m, frozenset(D))
-        if return_moments:
-            return (
-                self._evaluate_steps(steps, trace),
-                self._steps_rel_variance(steps),
-            )
-        return self._evaluate_steps(steps, trace)
+        return self._cancel_factors(steps)
 
     @staticmethod
-    def _evaluate_steps(steps: list[dict], trace: list | None) -> float:
-        """Cancel identical nominator/denominator terms across steps,
-        then evaluate the survivors (reference: spn_ensemble.py::
-        merge_indicator_exp). Each evaluated key is computed once and
-        memoized here, on top of the per-model B13 cache."""
-        from collections import Counter
-
+    def _cancel_factors(steps: list[dict]) -> tuple[list[dict], int]:
+        """Cancel identical nominator/denominator terms across steps
+        (reference: spn_ensemble.py::merge_indicator_exp): each key
+        appearing both as a nominator and a denominator skips that many
+        of each, earliest first. Returns every step with only its
+        surviving terms, and the number of cancelled pairs — the one
+        pass the estimate, its trace and its delta-method variance all
+        read."""
         nom_counts = Counter(k for s in steps for k, *_ in s["noms"])
         den_counts = Counter(k for s in steps for k, *_ in s["dens"])
         cancel = {
             k: min(nom_counts[k], den_counts[k])
             for k in nom_counts.keys() & den_counts.keys()
         }
-        cancelled_pairs = sum(cancel.values())
+        budgets = {"noms": dict(cancel), "dens": dict(cancel)}
 
+        def survivors(s: dict, side: str) -> list:
+            budget, out = budgets[side], []
+            for term in s[side]:
+                if budget.get(term[0], 0) > 0:
+                    budget[term[0]] -= 1
+                else:
+                    out.append(term)
+            return out
+
+        kept = [
+            dict(s, noms=survivors(s, "noms"), dens=survivors(s, "dens"))
+            for s in steps
+        ]
+        return kept, sum(cancel.values())
+
+    @staticmethod
+    def _evaluate_steps(
+        steps: list[dict], cancelled_pairs: int, trace: list | None
+    ) -> float:
+        """Product of the surviving factor terms (_cancel_factors).
+        Each evaluated key is computed once and memoized here, on top
+        of the per-model B13 cache."""
         values: dict = {}
 
         def ev(key, fn) -> float:
@@ -642,20 +717,12 @@ class SPNEnsemble:
                 values[key] = float(fn())
             return values[key]
 
-        nom_budget = dict(cancel)  # how many of each key to skip
-        den_budget = dict(cancel)
         est = 1.0
         for s in steps:
             est *= s["const"]
-            for k, fn, *_ in s["noms"]:
-                if nom_budget.get(k, 0) > 0:
-                    nom_budget[k] -= 1
-                    continue
+            for k, fn, _var in s["noms"]:
                 est *= ev(k, fn)
-            for k, fn, *_ in s["dens"]:
-                if den_budget.get(k, 0) > 0:
-                    den_budget[k] -= 1
-                    continue
+            for k, fn, _var in s["dens"]:
                 d = ev(k, fn)
                 if d <= 0:
                     est = 0.0
@@ -664,28 +731,19 @@ class SPNEnsemble:
             if est == 0.0:
                 break
         if trace is not None:
-            # per-step values are computed from the CANCELLED
-            # evaluation (fresh budgets, same skip rule as the
-            # estimate loop above) so product-of-trace-values ==
-            # estimate holds even in the zero-anchor case — the very
-            # case cancellation changes semantics (round-5 advice: the
-            # old uncancelled trace showed a 0 product while the
-            # returned estimate was nonzero)
-            t_nom_budget = dict(cancel)
-            t_den_budget = dict(cancel)
+            # per-step values come from the CANCELLED terms, like the
+            # estimate above, so product-of-trace-values == estimate
+            # holds even in the zero-anchor case — the very case
+            # cancellation changes semantics (round-5 advice: the old
+            # uncancelled trace showed a 0 product while the returned
+            # estimate was nonzero)
             for s in steps:
                 nom_v = 1.0
-                for k, fn, *_ in s["noms"]:
-                    if t_nom_budget.get(k, 0) > 0:
-                        t_nom_budget[k] -= 1
-                        continue
+                for k, fn, _var in s["noms"]:
                     nom_v *= ev(k, fn)
                 den_v = 1.0
                 zero_den = False
-                for k, fn, *_ in s["dens"]:
-                    if t_den_budget.get(k, 0) > 0:
-                        t_den_budget[k] -= 1
-                        continue
+                for k, fn, _var in s["dens"]:
                     d = ev(k, fn)
                     if d <= 0:
                         zero_den = True
@@ -710,51 +768,22 @@ class SPNEnsemble:
 
     @staticmethod
     def _steps_rel_variance(steps: list[dict]) -> float:
-        """RELATIVE variance of the factor-chain product, delta-method
-        composed: for independent factors, rel-vars of nominators and
-        denominators ADD (var(xy)/xy² ≈ vx/x² + vy/y², same for
-        ratios). Cancelled nominator/denominator pairs contribute
-        zero (they cancel exactly, not just in expectation) and are
-        skipped with the same budgets as the value pass. Terms with no
-        variance thunk (the uniform-children ensemble denominator)
-        contribute zero."""
-        from collections import Counter
-
-        nom_counts = Counter(k for s in steps for k, *_ in s["noms"])
-        den_counts = Counter(k for s in steps for k, *_ in s["dens"])
-        cancel = {
-            k: min(nom_counts[k], den_counts[k])
-            for k in nom_counts.keys() & den_counts.keys()
-        }
-        nom_budget = dict(cancel)
-        den_budget = dict(cancel)
+        """RELATIVE variance of the factor-chain product over the
+        surviving terms (_cancel_factors), delta-method composed: for
+        independent factors, rel-vars of nominators and denominators
+        ADD (var(xy)/xy² ≈ vx/x² + vy/y², same for ratios). Cancelled
+        pairs contribute zero (they cancel exactly, not just in
+        expectation). Terms with no variance thunk (the
+        uniform-children ensemble denominator) contribute zero."""
         memo: dict = {}
-
-        def rv(key, var_fn) -> float:
-            if var_fn is None:
-                return 0.0
-            if key not in memo:
-                memo[key] = float(var_fn())
-            return memo[key]
-
         total = 0.0
         for s in steps:
-            for term in s["noms"]:
-                k, _fn, var_fn = term[0], term[1], (
-                    term[2] if len(term) > 2 else None
-                )
-                if nom_budget.get(k, 0) > 0:
-                    nom_budget[k] -= 1
+            for key, _fn, var_fn in s["noms"] + s["dens"]:
+                if var_fn is None:
                     continue
-                total += rv(k, var_fn)
-            for term in s["dens"]:
-                k, _fn, var_fn = term[0], term[1], (
-                    term[2] if len(term) > 2 else None
-                )
-                if den_budget.get(k, 0) > 0:
-                    den_budget[k] -= 1
-                    continue
-                total += rv(k, var_fn)
+                if key not in memo:
+                    memo[key] = float(var_fn())
+                total += memo[key]
         return total
 
     def _factorized_count_moments(self, query: Query) -> tuple[float, float]:
@@ -763,17 +792,15 @@ class SPNEnsemble:
         method variance through the factor chain (B10 ∘ B11 — closes
         the multi-model OR-CI gap). Single-variant, like
         cardinality(max_variants=1)."""
-        import math as _m
-
         variants = self._ranked_variants_or_seed(query)
         for _key, first, covered in variants:
             try:
-                est, rel_var = self._expand_factors(
-                    query, first, set(covered), return_moments=True
-                )
+                steps, pairs = self._factor_chain(query, first, set(covered))
+                est = self._evaluate_steps(steps, pairs, None)
+                rel_var = self._steps_rel_variance(steps)
             except ValueError:
                 continue
-            return float(est), float(est) * _m.sqrt(max(rel_var, 0.0))
+            return float(est), float(est) * math.sqrt(max(rel_var, 0.0))
         raise ValueError("query join graph is disconnected across models")
 
     def explain_factors(self, query: Query, max_variants: int = 1) -> list[dict]:
@@ -790,15 +817,19 @@ class SPNEnsemble:
         single 'single_model' entry. Cross-column OR groups expand to
         one 'ie_term' entry per signed inclusion-exclusion term."""
         if self._complex_or_index(query) is not None:
+            terms: list = []
+            self._signed_sum(
+                query, lambda q: {(): self.cardinality(q, max_variants)}, trace=terms
+            )
             return [
                 {
                     "kind": "ie_term",
                     "sign": s,
                     "conditions": [str(c) for c in q.conditions],
-                    "value": self.cardinality(q, max_variants),
+                    "value": answer[()],
                     "variant": 0,
                 }
-                for s, q in self._ie_terms(query)
+                for s, q, answer in terms
             ]
         try:
             model = self.select_model(query)
@@ -842,14 +873,12 @@ class SPNEnsemble:
         i = self._complex_or_index(query)
         if i is None:
             return [(1.0, query)]
-        from itertools import combinations
-
         cond = query.conditions[i]
         before, after = query.conditions[:i], query.conditions[i + 1:]
         out: list[tuple[float, Query]] = []
         for r in range(1, len(cond.value) + 1):
             sign = 1.0 if r % 2 else -1.0
-            for subset in combinations(cond.value, r):
+            for subset in itertools.combinations(cond.value, r):
                 q2 = Query(
                     query_type=query.query_type,
                     table_set=set(query.table_set),
@@ -863,14 +892,45 @@ class SPNEnsemble:
                 )
         return out
 
+    def _signed_sum(self, query: Query, per_term, positive=None, trace=None):
+        """The one signed-term sum over the inclusion-exclusion terms
+        (_ie_terms; a conjunctive query is its own single +1 term).
+        ``per_term(q)`` answers one term as {key: value}; values
+        combine key-wise — a float, or a {value: mass} dict per value,
+        signed; an (est, var) pair with the estimate signed and the
+        variance added (signs square away; per-term sampling errors
+        are treated as independent). Returns (total, visible): the keys
+        some POSITIVE term produced — for which ``positive(value)``
+        holds, when given — since negative terms only subtract overlap
+        mass and never reveal a new key. ``trace`` collects (sign,
+        term, term answer)."""
+        total: dict = {}
+        visible: set = set()
+        for sign, q in self._ie_terms(query):
+            answer = per_term(q)
+            if trace is not None:
+                trace.append((sign, q, answer))
+            for key, val in answer.items():
+                if sign > 0 and (positive is None or positive(val)):
+                    visible.add(key)
+                if isinstance(val, dict):
+                    slot = total.setdefault(key, {})
+                    for v, mass in val.items():
+                        slot[v] = slot.get(v, 0.0) + sign * mass
+                elif isinstance(val, tuple):
+                    est, var = total.get(key, (0.0, 0.0))
+                    total[key] = (est + sign * val[0], var + val[1])
+                else:
+                    total[key] = total.get(key, 0.0) + sign * val
+        return total, visible
+
     # -- answering -----------------------------------------------------
     def cardinality(self, query: Query, max_variants: int = 1) -> float:
         if self._complex_or_index(query) is not None:
-            total = sum(
-                s * self.cardinality(q, max_variants)
-                for s, q in self._ie_terms(query)
+            total, _ = self._signed_sum(
+                query, lambda q: {(): self.cardinality(q, max_variants)}
             )
-            return max(total, 0.0)
+            return max(total[()], 0.0)
         try:
             model = self.select_model(query)
         except ValueError:
@@ -919,59 +979,26 @@ class SPNEnsemble:
         COUNT(DISTINCT) (round 7) thresholds the factorized per-value
         masses (_chain_value_masses): anchor per-value grid scaled by
         the factor chain's NOT-NULL total."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-            Condition,
-        )
-
         if query.group_bys:
             return self._aqp_factorized_grouped(query)
-        _q_rels, component, sub_query = self._query_graph(query)
 
-        def count_chain(extra_conds: list) -> float:
-            return self._chain_count(query, extra_conds)
-
-        def anchor_avg(operands: list[tuple[str, str]]) -> float:
-            """AVG of the operand product from the best local model."""
-            m, local = self._anchor_local(query, operands)
-            (row,) = m.aqp(local)
-            return float(row["v"])
-
-        out_row: dict = {}
-        acc: float | None = None
-        alias = None
-        for op in query.aggregations:
-            if getattr(op, "distinct", False):
+        def value_of(op) -> float:
+            if op.distinct:
                 # COUNT(DISTINCT) over a multi-model table set: the
                 # factorized per-value masses, thresholded (round 7)
-                val = self._factorized_distinct(query, op.operands[0])
-            elif op.agg_type is AggregationType.COUNT:
-                nn = [
-                    Condition(t, c, "IS_NOT_NULL") for t, c in (op.operands or [])
-                ]
-                val = count_chain(nn)
-            else:
-                nn = [Condition(t2, c2, "IS_NOT_NULL") for t2, c2 in op.operands]
-                avg = anchor_avg(op.operands)
-                if op.agg_type is AggregationType.AVG:
-                    val = avg
-                else:  # SUM
-                    val = avg * count_chain(nn)
-            if op.op_type is AggregationOperationType.AGGREGATION:
-                if acc is not None:
-                    out_row[alias or f"agg_{len(out_row)}"] = acc
-                acc, alias = val, op.alias
-            elif op.op_type is AggregationOperationType.PLUS:
-                acc = acc + val
-            else:
-                acc = acc - val
-        if acc is not None:
-            out_row[alias or f"agg_{len(out_row)}"] = acc
-        from .model import _apply_having
+                return self._distinct_counts(query, op.operands[0])[()]
+            nn = [Condition(t, c, "IS_NOT_NULL") for t, c in (op.operands or [])]
+            if op.agg_type is AggregationType.COUNT:
+                return self._chain_count(query, nn)
+            # AVG of the operand product from the best local model
+            m, local = self._anchor_local(query, op.operands)
+            (row,) = m.aqp(local)
+            avg = float(row["v"])
+            if op.agg_type is AggregationType.AVG:
+                return avg
+            return avg * self._chain_count(query, nn)  # SUM
 
-        return _apply_having([out_row], query.having)
+        return _fold_aggregates(query, value_of)
 
     def _aqp_inclusion_exclusion(self, query: Query) -> list[dict]:
         """AQP over cross-column OR groups: each COUNT/SUM output is
@@ -982,129 +1009,118 @@ class SPNEnsemble:
         of the disjuncts' group sets — exactly SQL's visible groups),
         and its values are the signed sums over all terms (missing
         term-groups contribute 0)."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-        )
-
-        terms = self._ie_terms(query)
         gb_cols = [c for _t, c in query.group_bys]
+        # visible groups: the keys the POSITIVE terms give the FIRST
+        # aggregate (_signed_sum) — a group appears in SQL's output
+        # iff some disjunct conjunction admits rows for it
+        visible: set[tuple] | None = None if gb_cols else {()}
 
-        def per_term(q, agg_type, operands, distinct=False) -> list[dict]:
-            q1 = Query(
-                query_type=q.query_type,
-                table_set=set(q.table_set),
-                relationship_set=set(q.relationship_set),
-                conditions=list(q.conditions),
-                group_bys=list(q.group_bys),
-                aggregations=[
-                    AggOperation(
-                        AggregationOperationType.AGGREGATION,
-                        agg_type,
-                        list(operands),
-                        alias="v",
-                        distinct=distinct,
-                    )
-                ],
-            )
-            # full router: terms over table sets no single model
-            # covers take the factorized path (incl. grouped)
-            return self.aqp(q1)
-
-        # visible groups = union of group keys over POSITIVE terms: a
-        # group appears in SQL's output iff some disjunct conjunction
-        # admits rows for it (negative terms only subtract overlap
-        # mass and can never reveal a new group). Collected during the
-        # first signed() pass.
-        visible: set[tuple] = set() if gb_cols else {()}
-        collect_visible = bool(gb_cols)
-
-        def signed(agg_type, operands, distinct=False) -> dict[tuple, float]:
+        def signed(agg_type, operands) -> dict[tuple, float]:
             """group key tuple -> signed sum (key = () when ungrouped).
             Valid for COUNT/SUM — linear in the row indicator. NOT
             valid for per-term THRESHOLDED distinct counts (a value
             can satisfy different disjuncts on different rows), so
-            COUNT(DISTINCT) never routes here: ungrouped goes through
-            _ie_distinct_count (signed per-value masses), grouped
-            through _ie_grouped_distinct_count (signed per-cell
-            masses)."""
-            nonlocal collect_visible
-            total: dict[tuple, float] = {}
-            for sign, q in terms:
-                for row in per_term(q, agg_type, operands, distinct):
-                    key = tuple(row[c] for c in gb_cols)
-                    total[key] = total.get(key, 0.0) + sign * row["v"]
-                    if collect_visible and sign > 0:
-                        visible.add(key)
-            collect_visible = False
+            COUNT(DISTINCT) never routes here: it signs per-value or
+            per-(group, value) masses instead (_signed_masses)."""
+            nonlocal visible
+            total, keys = self._signed_sum(
+                query,
+                # full router: terms over table sets no single model
+                # covers take the factorized path (incl. grouped)
+                lambda q: {
+                    tuple(row[c] for c in gb_cols): row["v"]
+                    for row in self.aqp(
+                        _single_aggregate(q, agg_type, operands, q.group_bys)
+                    )
+                },
+            )
+            if visible is None:
+                visible = keys
             return total
 
-        outputs: list[tuple[str, dict[tuple, float]]] = []
-        acc: dict[tuple, float] | None = None
-        alias = None
-
-        def combine(a, b, f):
-            return {k: f(a.get(k, 0.0), b.get(k, 0.0)) for k in visible}
-
-        for op in query.aggregations:
+        def value_of(op) -> dict[tuple, float]:
+            nonlocal visible
             if op.agg_type is AggregationType.AVG:
                 num = signed(AggregationType.SUM, op.operands)
                 den = signed(AggregationType.COUNT, op.operands)
-                val = {
+                return {
                     k: (num.get(k, 0.0) / den[k])
                     if den.get(k, 0.0) > 0
                     else float("nan")
                     for k in visible
                 }
-            elif op.distinct:
-                if gb_cols:
-                    val = self._ie_grouped_distinct_count(
-                        query, op.operands[0], gb_cols
-                    )
-                    if collect_visible:
-                        visible.update(val.keys())
-                        collect_visible = False
-                else:
-                    val = {
-                        (): self._ie_distinct_count(query, op.operands[0])
-                    }
-            else:
-                val = signed(op.agg_type, op.operands, op.distinct)
-                if op.agg_type is AggregationType.COUNT:
-                    # IE residue can overshoot below zero (the same
-                    # reason cardinality() clamps); a negative COUNT
-                    # is an impossible SQL value. SUM legitimately
-                    # goes negative, so only COUNT clamps.
-                    val = {k: max(v, 0.0) for k, v in val.items()}
-            if op.op_type is AggregationOperationType.AGGREGATION:
-                if acc is not None:
-                    outputs.append((alias or f"agg_{len(outputs)}", acc))
-                acc, alias = val, op.alias
-            elif op.op_type is AggregationOperationType.PLUS:
-                acc = combine(acc, val, lambda x, y: x + y)
-            else:
-                acc = combine(acc, val, lambda x, y: x - y)
-        if acc is not None:
-            outputs.append((alias or f"agg_{len(outputs)}", acc))
+            if op.distinct:
+                val = self._distinct_counts(query, op.operands[0], gb_cols)
+                if visible is None:
+                    visible = set(val)
+                return val
+            val = signed(op.agg_type, op.operands)
+            if op.agg_type is AggregationType.COUNT:
+                # IE residue can overshoot below zero (the same
+                # reason cardinality() clamps); a negative COUNT
+                # is an impossible SQL value. SUM legitimately
+                # goes negative, so only COUNT clamps.
+                val = {k: max(v, 0.0) for k, v in val.items()}
+            return val
 
-        rows = []
-        for key in sorted(visible, key=repr):
-            row = dict(zip(gb_cols, key))
-            for name, val in outputs:
-                row[name] = val.get(key, 0.0)
-            rows.append(row)
-        from .model import _apply_having
+        return _fold_aggregates(
+            query, value_of, lambda: [(k, k) for k in sorted(visible or (), key=repr)]
+        )
 
-        return _apply_having(rows, query.having)
+    def _signed_masses(
+        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+    ) -> dict[tuple, dict]:
+        """{visible group key: {decoded value: signed expected rows with
+        col = v}}; ungrouped, the one key (). Inclusion-exclusion
+        applies to the per-value MASSES (P(gb=g AND col=v AND ·) is
+        linear in the row indicator), so the expected-rows threshold is
+        taken on the COMBINED mass. Signing thresholded per-term COUNTS
+        would be wrong: a value can satisfy A on one row and B on
+        another without any row satisfying A AND B, so distinct SETS do
+        not obey |D(A or B)| = |D(A)| + |D(B)| - |D(A and B)|. Masses
+        are combined in EXPECTED-ROW units (each term's own
+        full_join_size) keyed by DECODED values: terms answered by
+        different models must not mix probability masses over
+        different denominators or per-model dictionary codes. Terms
+        over table sets no single model covers ride the factorized
+        masses (round 7). Visible groups follow the aqp rule: a group
+        appears iff some POSITIVE term gives it expected rows >= 0.5."""
+        if not gb_cols:
+            total, _ = self._signed_sum(
+                query, lambda q: self._chain_value_masses(q, col_ref)
+            )
+            return {(): total}
+        total, visible = self._signed_sum(
+            query,
+            lambda q: self._chain_grouped_value_masses(q, gb_cols, col_ref),
+            positive=lambda vm: sum(vm.values()) >= 0.5,
+        )
+        return {key: total.get(key, {}) for key in visible}
 
-    def _distinct_occupancy_moments(
-        self, query: Query, col_ref: tuple[str, str]
-    ) -> list[float]:
-        """[est, var] for COUNT(DISTINCT col) under cross-column OR
-        (round 8 — previously a ModelPlaneUnsupported refusal). The
-        point estimate is the SAME 0.5-threshold count aqp emits
-        (_ie_distinct_count), so CI and aqp answers agree. The
+    @staticmethod
+    def _threshold_count(masses) -> float:
+        """Values with at least 0.5 expected rows: the pruning rule every
+        distinct/grid estimate here uses."""
+        return float(sum(1 for rows in masses if rows >= 0.5))
+
+    def _distinct_counts(
+        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+    ) -> dict[tuple, float]:
+        """{visible group key: COUNT(DISTINCT col)} (key () when
+        ungrouped) for any query the model plane answers: the signed
+        masses of _signed_masses, thresholded per value."""
+        return {
+            key: self._threshold_count(vm.values())
+            for key, vm in self._signed_masses(query, col_ref, gb_cols).items()
+        }
+
+    def _occupancy_moments(
+        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+    ) -> dict[tuple, list[float]]:
+        """{visible group key: [est, var]} for COUNT(DISTINCT col) (round
+        8 — previously a ModelPlaneUnsupported refusal). The point
+        estimate is the SAME 0.5-threshold count aqp emits
+        (_distinct_counts), so CI and aqp answers agree. The
         variance treats each value's presence as an independent
         Bernoulli under a Poisson occupancy model: rows carrying value
         v arrive ~Poisson(m_v), where m_v is the value's combined
@@ -1119,14 +1135,15 @@ class SPNEnsemble:
         variance in quadrature (var += (est - Σp)²), keeping the
         interval calibrated without moving the estimate off the aqp
         answer (tests/test_round8_fixes.py::
-        test_occupancy_ci_calibration_numpy pins coverage). (The
-        reference has neither distinct estimation nor OR grammar —
-        extension surface.)"""
-        acc: dict = {}
-        for s, q in self._ie_terms(query):
-            for v, rows in self._chain_value_masses(q, col_ref).items():
-                acc[v] = acc.get(v, 0.0) + s * rows
-        return self._occupancy_moments_from_masses(acc.values())
+        test_occupancy_ci_calibration_numpy pins coverage). Grouped,
+        the per-(group, value) masses combine exactly as the grouped
+        aqp's, with the same visible groups. (The reference has
+        neither distinct estimation nor OR grammar — extension
+        surface.)"""
+        return {
+            key: self._occupancy_moments_from_masses(vm.values())
+            for key, vm in self._signed_masses(query, col_ref, gb_cols).items()
+        }
 
     @staticmethod
     def _occupancy_moments_from_masses(masses) -> list[float]:
@@ -1134,76 +1151,15 @@ class SPNEnsemble:
         est = 0.5-threshold count (the aqp estimator), var = Poisson-
         binomial occupancy variance Σ p(1-p) plus the squared offset
         between the threshold center and the occupancy mean Σp."""
-        import math as _m
-
         est, mean, var = 0.0, 0.0, 0.0
         for rows in masses:
             if rows >= 0.5:
                 est += 1.0
-            p = 1.0 - _m.exp(-max(rows, 0.0))
+            p = 1.0 - math.exp(-max(rows, 0.0))
             mean += p
             var += p * (1.0 - p)
         var += (est - mean) ** 2
         return [est, var]
-
-    def _grouped_distinct_occupancy_moments(
-        self, query: Query, col_ref: tuple[str, str], gb_cols: list[str]
-    ) -> dict[tuple, list[float]]:
-        """{group key: [est, var]} for grouped COUNT(DISTINCT) under
-        cross-column OR (round 8): per-(group, value) signed masses
-        exactly as _ie_grouped_distinct_count combines them, then
-        per-group Poisson-occupancy variance as in
-        _distinct_occupancy_moments. Visible groups follow the aqp
-        rule (some positive term gives the group >= 0.5 expected
-        rows)."""
-        acc: dict[tuple, dict] = {}
-        pos_keys: set[tuple] = set()
-        for s, q in self._ie_terms(query):
-            gm = self._chain_grouped_value_masses(q, gb_cols, col_ref)
-            for key, vm in gm.items():
-                if s > 0 and sum(vm.values()) >= 0.5:
-                    pos_keys.add(key)
-                slot = acc.setdefault(key, {})
-                for v, rows in vm.items():
-                    slot[v] = slot.get(v, 0.0) + s * rows
-        return {
-            key: self._occupancy_moments_from_masses(
-                acc.get(key, {}).values()
-            )
-            for key in pos_keys
-        }
-
-    def _ie_distinct_count(
-        self, query: Query, col_ref: tuple[str, str]
-    ) -> float:
-        """Distinct count under cross-column OR: inclusion-exclusion
-        applies to the per-value MASSES (P(col=v AND ·) is linear in
-        the indicator), and the expected-rows threshold is taken on
-        the combined mass. Signing thresholded per-term COUNTS would
-        be wrong: a value can satisfy A on one row and B on another
-        without any row satisfying A AND B, so distinct SETS do not
-        obey |D(A or B)| = |D(A)| + |D(B)| - |D(A and B)|."""
-        # expected-row units per term (each term's own full_join_size)
-        # keyed by DECODED values: terms answered by different models
-        # must not mix probability masses over different denominators
-        # or per-model dictionary codes. Terms over table sets no
-        # single model covers ride the factorized per-value masses.
-        acc: dict = {}
-        for s, q in self._ie_terms(query):
-            for v, rows in self._chain_value_masses(q, col_ref).items():
-                acc[v] = acc.get(v, 0.0) + s * rows
-        return float(sum(1 for rows in acc.values() if rows >= 0.5))
-
-    @staticmethod
-    def _decode_domain(model: SPNModel, col: str, dom) -> list:
-        """Per-model dictionary codes -> original values (floats for
-        numerics), so masses from different models combine on the same
-        keys."""
-        cm = model.meta.columns[col]
-        if cm.kind == "categorical" and cm.value_to_code:
-            inv = {code: k for k, code in cm.value_to_code.items()}
-            return [inv.get(int(v), float(v)) for v in dom]
-        return [float(v) for v in dom]
 
     def _chain_value_masses(
         self, query: Query, col_ref: tuple[str, str]
@@ -1218,8 +1174,6 @@ class SPNEnsemble:
         the per-value form of the independence the factorized COUNT
         already assumes for remote selectivities (reference:
         spn_ensemble.py::evaluate_factors; budget-tested, not exact)."""
-        from ..plans.query import Condition
-
         t, c = col_ref
         try:
             model = self.select_model(query)
@@ -1228,39 +1182,15 @@ class SPNEnsemble:
         if model is not None:
             dom, masses = model._value_masses(c, query)
             fjs = model.full_join_size
-            return dict(
-                zip(
-                    self._decode_domain(model, c, dom),
-                    (fjs * masses).tolist(),
-                )
-            )
+            return dict(zip(map(model._decoder(c), dom), (fjs * masses).tolist()))
         m, local = self._anchor_local(query, [col_ref])
         dom, masses = m._value_masses(c, local)
         fjs = m.full_join_size
         anchor_nn = fjs * float(masses.sum())
         if anchor_nn <= 0 or len(dom) == 0:
             return {}
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions)
-            + [Condition(t, c, "IS_NOT_NULL")],
-        )
-        sc = float(self.cardinality(qc)) / anchor_nn
-        return dict(
-            zip(self._decode_domain(m, c, dom), (fjs * masses * sc).tolist())
-        )
-
-    def _factorized_distinct(
-        self, query: Query, col_ref: tuple[str, str]
-    ) -> float:
-        """COUNT(DISTINCT col) over a table set no single model covers:
-        threshold the factorized per-value masses at 0.5 expected rows
-        (the same pruning rule every distinct/grid estimate here
-        uses)."""
-        vm = self._chain_value_masses(query, col_ref)
-        return float(sum(1 for rows in vm.values() if rows >= 0.5))
+        sc = self._chain_count(query, [Condition(t, c, "IS_NOT_NULL")]) / anchor_nn
+        return dict(zip(map(m._decoder(c), dom), (fjs * masses * sc).tolist()))
 
     def _col_ref(self, col: str, query: Query) -> tuple[str, str]:
         """(owning table, column) for a bare column name, resolved
@@ -1289,14 +1219,6 @@ class SPNEnsemble:
         group-independence assumption). Requires one model covering
         every group-by table and aggregate operand inside a connected
         piece of the query's join graph."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-            Condition,
-        )
-        from .model import _apply_having
-
         gb_cols = [c for _t, c in query.group_bys]
         need = {t for t, _c in query.group_bys} | {
             t for op in query.aggregations for t, _c in (op.operands or [])
@@ -1311,27 +1233,15 @@ class SPNEnsemble:
             return self._aqp_factorized_grouped_split(query)
         m, piece = anchor
 
-        def local_q(agg_type, operands):
-            lq = sub_query(set(piece))
-            lq.group_bys = list(query.group_bys)
-            lq.aggregations = [
-                AggOperation(
-                    AggregationOperationType.AGGREGATION,
-                    agg_type,
-                    list(operands or []),
-                    alias="v",
-                )
-            ]
-            return lq
-
-        def chain_count(extra: list) -> float:
-            return self._chain_count(query, extra)
-
-        def grid(agg_type, operands) -> dict[tuple, float]:
-            return {
-                tuple(r[c] for c in gb_cols): float(r["v"])
-                for r in m.aqp(local_q(agg_type, operands))
-            }
+        # grids and scaled counts are cached for this answer only: the
+        # COUNT(*) output is the anchor count, and SUM and AVG (or
+        # COUNT) over the same operands share their grids
+        @functools.cache
+        def grid(agg_type, operands: tuple) -> dict[tuple, float]:
+            lq = _single_aggregate(
+                sub_query(set(piece)), agg_type, operands, query.group_bys
+            )
+            return {tuple(r[c] for c in gb_cols): float(r["v"]) for r in m.aqp(lq)}
 
         def weight_edge():
             """The anchor piece's single frontier FK edge whose PARENT
@@ -1361,14 +1271,14 @@ class SPNEnsemble:
             ]
             return cands[0] if len(cands) == 1 else None
 
-        def scaled_count(operands) -> dict[tuple, float]:
+        @functools.cache
+        def scaled_count(operands: tuple) -> dict[tuple, float]:
             g = grid(AggregationType.COUNT, operands)
             wrel = weight_edge()
             if wrel is not None and g:
                 lq = sub_query(set(piece))
                 base_conditions = list(lq.conditions) + [
-                    Condition(t, c, "IS_NOT_NULL")
-                    for t, c in (operands or [])
+                    Condition(t, c, "IS_NOT_NULL") for t, c in operands
                 ]
                 gw: dict[tuple, float] = {}
                 for k in g:
@@ -1385,72 +1295,38 @@ class SPNEnsemble:
             # the anchor grid's group axes exclude NULLs, so the chain
             # total must too (round 7: without the group-column NOT
             # NULL pins, null-group row mass inflated every group)
-            extra = [
-                Condition(t, c, "IS_NOT_NULL") for t, c in (operands or [])
-            ] + [
-                Condition(gt, gc, "IS_NOT_NULL")
-                for gt, gc in query.group_bys
+            extra = [Condition(t, c, "IS_NOT_NULL") for t, c in operands] + [
+                Condition(gt, gc, "IS_NOT_NULL") for gt, gc in query.group_bys
             ]
-            sc = chain_count(extra) / tot
+            sc = self._chain_count(query, extra) / tot
             return {k: v * sc for k, v in g.items()}
 
-        def grouped_distinct(col_ref: tuple[str, str]) -> dict[tuple, float]:
-            """Per-group COUNT(DISTINCT col): the anchor's per-(group,
-            value) masses scaled by the factor chain (the same
-            group-independent remote factor scaled_count assumes),
-            then the 0.5-expected-rows threshold per cell."""
-            gm = self._chain_grouped_value_masses(query, gb_cols, col_ref)
-            return {
-                k: float(sum(1 for rows in vm.values() if rows >= 0.5))
-                for k, vm in gm.items()
-            }
-
-        anchor_cnt = scaled_count([])
-        outputs: list[tuple[str, dict]] = []
-        acc: dict | None = None
-        alias = None
-        for op in query.aggregations:
-            if getattr(op, "distinct", False):
-                val = grouped_distinct(op.operands[0])
-            elif op.agg_type is AggregationType.COUNT:
-                val = scaled_count(op.operands)
-            elif op.agg_type is AggregationType.AVG:
+        def value_of(op) -> dict[tuple, float]:
+            ops = tuple(op.operands or [])
+            if op.distinct:
+                # per-group COUNT(DISTINCT col): the anchor's per-(group,
+                # value) masses scaled by the factor chain (the same
+                # group-independent remote factor scaled_count assumes),
+                # then the 0.5-expected-rows threshold per cell
+                return self._distinct_counts(query, op.operands[0], gb_cols)
+            if op.agg_type is AggregationType.COUNT:
+                return scaled_count(ops)
+            if op.agg_type is AggregationType.AVG:
                 # ratios are scale-free: the anchor's per-group AVG IS
                 # the estimate (remote factors cancel)
-                val = grid(AggregationType.AVG, op.operands)
-            else:  # SUM = per-group AVG x per-group scaled nn-count
-                avg_g = grid(AggregationType.AVG, op.operands)
-                cnt_g = scaled_count(op.operands)
-                val = {
-                    k: avg_g.get(k, 0.0) * cnt_g.get(k, 0.0)
-                    for k in set(avg_g) | set(cnt_g)
-                }
-            if op.op_type is AggregationOperationType.AGGREGATION:
-                if acc is not None:
-                    outputs.append((alias or f"agg_{len(outputs)}", acc))
-                acc, alias = val, op.alias
-            elif op.op_type is AggregationOperationType.PLUS:
-                acc = {
-                    k: acc.get(k, 0.0) + val.get(k, 0.0)
-                    for k in set(acc) | set(val)
-                }
-            else:
-                acc = {
-                    k: acc.get(k, 0.0) - val.get(k, 0.0)
-                    for k in set(acc) | set(val)
-                }
-        if acc is not None:
-            outputs.append((alias or f"agg_{len(outputs)}", acc))
+                return grid(AggregationType.AVG, ops)
+            # SUM = per-group AVG x per-group scaled nn-count
+            avg_g = grid(AggregationType.AVG, ops)
+            cnt_g = scaled_count(ops)
+            return {
+                k: avg_g.get(k, 0.0) * cnt_g.get(k, 0.0)
+                for k in set(avg_g) | set(cnt_g)
+            }
 
-        rows = []
-        for k in sorted(
-            (k for k, v in anchor_cnt.items() if v >= 0.5), key=repr
-        ):
-            row = dict(zip(gb_cols, k))
-            for name, val in outputs:
-                row[name] = val.get(k, 0.0)
-            rows.append(row)
-        return _apply_having(rows, query.having)
+        visible = [k for k, v in scaled_count(()).items() if v >= 0.5]
+        return _fold_aggregates(
+            query, value_of, lambda: [(k, k) for k in sorted(visible, key=repr)]
+        )
 
     def _aqp_factorized_grouped_split(self, query: Query) -> list[dict]:
         """Grouped AQP where the group-by tables and the aggregate
@@ -1480,30 +1356,15 @@ class SPNEnsemble:
         spn_ensemble.py factorized expectation chains (the reference
         instead trains a relationship model per common join shape;
         this path removes that requirement)."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-            Condition,
-        )
-        from .model import ModelPlaneUnsupported, _apply_having
-
         gb_cols = [c for _t, c in query.group_bys]
         need_g = {t for t, _c in query.group_bys}
         _q_rels, component, sub_query = self._query_graph(query)
         anchor = self._grouped_anchor(query, need_g, component)
         if anchor is not None:
             mg, gpiece = anchor
-            lq = sub_query(set(gpiece))
-            lq.group_bys = list(query.group_bys)
-            lq.aggregations = [
-                AggOperation(
-                    AggregationOperationType.AGGREGATION,
-                    AggregationType.COUNT,
-                    [],
-                    alias="v",
-                )
-            ]
+            lq = _single_aggregate(
+                sub_query(set(gpiece)), AggregationType.COUNT, [], query.group_bys
+            )
             keys = [tuple(r[c] for c in gb_cols) for r in mg.aqp(lq)]
         else:
             # group-by tables themselves span models with no single
@@ -1519,10 +1380,16 @@ class SPNEnsemble:
                 for (t, c), v in zip(query.group_bys, key)
             ]
 
-        def chain_count(extra: list) -> float:
-            return self._chain_count(query, extra)
+        # cached for this answer only: COUNT(*) is the visibility
+        # count, and SUM shares its AVG grid and pinned NOT-NULL count
+        # with AVG and COUNT over the same operands
+        @functools.cache
+        def pinned_count(operands: tuple) -> dict:
+            nn = [Condition(t, c, "IS_NOT_NULL") for t, c in operands]
+            return {k: self._chain_count(query, pin(k) + nn) for k in keys}
 
-        def avg_grid(operands: list) -> dict:
+        @functools.cache
+        def avg_grid(operands: tuple) -> dict:
             """{group key: AVG(operands)} from the operand anchor.
             Group columns living INSIDE the operand's piece are pinned
             per key (the anchor sees that group↔operand correlation
@@ -1531,9 +1398,7 @@ class SPNEnsemble:
             documents. When no group table intersects the piece this
             degenerates to one group-independent AVG, the original
             split-anchor behavior."""
-            import math as _m
-
-            m, local = self._anchor_local(query, operands)
+            m, local = self._anchor_local(query, list(operands))
             in_piece = [
                 i
                 for i, (t, _c) in enumerate(query.group_bys)
@@ -1558,67 +1423,38 @@ class SPNEnsemble:
                         a = float(r["v"])
                     except (ValueError, ZeroDivisionError):
                         a = a0
-                    cache[pk] = a if _m.isfinite(a) else a0
+                    cache[pk] = a if math.isfinite(a) else a0
                 out[k] = cache[pk]
             local.conditions = base_conditions
             return out
 
-        cnt_pin = {k: chain_count(pin(k)) for k in keys}
-        outputs: list[tuple[str, dict]] = []
-        acc: dict | None = None
-        alias = None
-        for op in query.aggregations:
-            ops = list(op.operands or [])
-            nn = [Condition(t, c, "IS_NOT_NULL") for t, c in ops]
-            if getattr(op, "distinct", False):
+        visible = [k for k, n in pinned_count(()).items() if n >= 0.5]
+
+        def value_of(op) -> dict:
+            ops = tuple(op.operands or [])
+            if op.distinct:
                 # distinct column lives in a different model than the
                 # group-by columns: pin each group key as an equality
                 # condition (the split pattern the per-group COUNTs
                 # already use) and threshold the factorized per-value
                 # masses of the pinned chain (round 7)
-                val = {}
-                for k in keys:
-                    qk = Query(
-                        query_type=QueryType.CARDINALITY,
-                        table_set=set(query.table_set),
-                        relationship_set=set(query.relationship_set),
-                        conditions=list(query.conditions) + pin(k),
-                    )
-                    val[k] = self._factorized_distinct(qk, op.operands[0])
-            elif op.agg_type is AggregationType.COUNT:
-                if nn:
-                    val = {k: chain_count(pin(k) + nn) for k in keys}
-                else:
-                    val = dict(cnt_pin)
-            elif op.agg_type is AggregationType.AVG:
-                val = avg_grid(ops)
-            else:  # SUM
-                ag = avg_grid(ops)
-                val = {k: ag[k] * chain_count(pin(k) + nn) for k in keys}
-            if op.op_type is AggregationOperationType.AGGREGATION:
-                if acc is not None:
-                    outputs.append((alias or f"agg_{len(outputs)}", acc))
-                acc, alias = val, op.alias
-            elif op.op_type is AggregationOperationType.PLUS:
-                acc = {
-                    k: acc.get(k, 0.0) + val.get(k, 0.0)
-                    for k in set(acc) | set(val)
+                return {
+                    k: self._distinct_counts(
+                        _with_conditions(query, pin(k)), op.operands[0]
+                    )[()]
+                    for k in keys
                 }
-            else:
-                acc = {
-                    k: acc.get(k, 0.0) - val.get(k, 0.0)
-                    for k in set(acc) | set(val)
-                }
-        if acc is not None:
-            outputs.append((alias or f"agg_{len(outputs)}", acc))
+            if op.agg_type is AggregationType.COUNT:
+                return pinned_count(ops)
+            if op.agg_type is AggregationType.AVG:
+                return avg_grid(ops)
+            ag = avg_grid(ops)  # SUM
+            cnt = pinned_count(ops)
+            return {k: ag[k] * cnt[k] for k in keys}
 
-        rows = []
-        for k in sorted((k for k in keys if cnt_pin[k] >= 0.5), key=repr):
-            row = dict(zip(gb_cols, k))
-            for name, val in outputs:
-                row[name] = val.get(k, 0.0)
-            rows.append(row)
-        return _apply_having(rows, query.having)
+        return _fold_aggregates(
+            query, value_of, lambda: [(k, k) for k in sorted(visible, key=repr)]
+        )
 
     def _cross_piece_group_keys(
         self, query: Query, component, sub_query
@@ -1638,20 +1474,6 @@ class SPNEnsemble:
         ensemble_compilation/spn_ensemble.py::
         evaluate_factors_group_by (the reference requires one covering
         model; this composes per-piece grids instead)."""
-        import itertools as _it
-        import math as _m
-
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-        )
-        from .model import (
-            MAX_GROUPBY_CELLS,
-            GroupByExplosion,
-            ModelPlaneUnsupported,
-        )
-
         remaining = list(enumerate(query.group_bys))
         parts: list[tuple[list[int], list[tuple]]] = []
         while remaining:
@@ -1665,16 +1487,12 @@ class SPNEnsemble:
             m, piece = anchor
             sub = [(i, gb) for i, gb in remaining if gb[0] in piece]
             remaining = [(i, gb) for i, gb in remaining if gb[0] not in piece]
-            lq = sub_query(set(piece))
-            lq.group_bys = [gb for _i, gb in sub]
-            lq.aggregations = [
-                AggOperation(
-                    AggregationOperationType.AGGREGATION,
-                    AggregationType.COUNT,
-                    [],
-                    alias="v",
-                )
-            ]
+            lq = _single_aggregate(
+                sub_query(set(piece)),
+                AggregationType.COUNT,
+                [],
+                [gb for _i, gb in sub],
+            )
             cols = [c for _i, (_t, c) in sub]
             parts.append(
                 (
@@ -1723,7 +1541,7 @@ class SPNEnsemble:
         # 2M cells would be tens of minutes of driver math — callers
         # (Engine.estimate) catch GroupByExplosion and fall back exact
         cap = min(MAX_GROUPBY_CELLS, MAX_CROSS_PIECE_CELLS)
-        n_cells = _m.prod(len(ks) for _idx, ks in parts)
+        n_cells = math.prod(len(ks) for _idx, ks in parts)
         if n_cells > cap:
             raise GroupByExplosion(
                 f"cross-piece group grid has {n_cells} cells (> {cap}: "
@@ -1732,7 +1550,7 @@ class SPNEnsemble:
             )
         n = len(query.group_bys)
         keys = []
-        for combo in _it.product(*([k for k, _v in ks] for _idx, ks in parts)):
+        for combo in itertools.product(*([k for k, _v in ks] for _idx, ks in parts)):
             row: list = [None] * n
             for (idxs, _ks), kp in zip(parts, combo):
                 for i, v in zip(idxs, kp):
@@ -1746,13 +1564,6 @@ class SPNEnsemble:
         the query's join graph spans the most condition-bearing
         tables; the sub-query carries that piece's local conditions
         and an AVG over the operands aliased 'v'."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-        )
-        from .model import ModelPlaneUnsupported
-
         _q_rels, component, sub_query = self._query_graph(query)
         tabs = {t for t, _c in operands}
         # _grouped_anchor enforces tabs <= piece: a model covering all
@@ -1765,15 +1576,7 @@ class SPNEnsemble:
                 "one connected piece: use the exact plane"
             )
         m, piece = anchor
-        local = sub_query(set(piece))
-        local.aggregations = [
-            AggOperation(
-                AggregationOperationType.AGGREGATION,
-                AggregationType.AVG,
-                list(operands),
-                alias="v",
-            )
-        ]
+        local = _single_aggregate(sub_query(set(piece)), AggregationType.AVG, operands)
         return m, local
 
     def _factorized_sum_moments(
@@ -1785,18 +1588,8 @@ class SPNEnsemble:
         method over the product — relative variances of the anchor's
         AVG (its B10 CI sd) and the factor chain's COUNT add. Shares
         the independence assumption _aqp_factorized documents."""
-        import math as _m
-
-        from ..plans.query import Condition
-
         nn = [Condition(t, c, "IS_NOT_NULL") for t, c in operands]
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions) + nn,
-        )
-        cnt, sd_c = self._factorized_count_moments(qc)
+        cnt, sd_c = self._factorized_count_moments(_with_conditions(query, nn))
         m, local = self._anchor_local(query, operands)
         (row,) = m.confidence_interval(local, confidence=0.95)
         avg, sd_a = float(row["est"]), float(row.get("sd", 0.0))
@@ -1806,7 +1599,7 @@ class SPNEnsemble:
             rel += (sd_c / cnt) ** 2
         if avg != 0:
             rel += (sd_a / avg) ** 2
-        return est, abs(est) * _m.sqrt(rel)
+        return est, abs(est) * math.sqrt(rel)
 
     def _factorized_grouped_ci_moments(
         self, query: Query, agg_type, operands: list[tuple[str, str]]
@@ -1827,15 +1620,6 @@ class SPNEnsemble:
         lies in the operand anchor's piece flow into its local AVG
         automatically, so in-piece group↔operand correlations are
         kept; keys are pruned at 0.5 expected chain rows."""
-        import math as _m
-
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-            Condition,
-        )
-
         gb_cols = [c for _t, c in query.group_bys]
         need = {t for t, _c in query.group_bys} | {
             t for t, _c in (operands or [])
@@ -1846,15 +1630,9 @@ class SPNEnsemble:
             keys = self._cross_piece_group_keys(query, component, sub_query)
             out: dict[tuple, tuple[float, float]] = {}
             for k in keys:
-                pins = [
-                    Condition(t, c, "=", v)
-                    for (t, c), v in zip(query.group_bys, k)
-                ]
-                qk = Query(
-                    query_type=QueryType.CARDINALITY,
-                    table_set=set(query.table_set),
-                    relationship_set=set(query.relationship_set),
-                    conditions=list(query.conditions) + pins,
+                qk = _with_conditions(
+                    query,
+                    [Condition(t, c, "=", v) for (t, c), v in zip(query.group_bys, k)],
                 )
                 cnt, sd_c = self._factorized_count_moments(qk)
                 if cnt < 0.5:
@@ -1867,17 +1645,9 @@ class SPNEnsemble:
                     )
             return out
         m, piece = anchor
-
-        local = sub_query(set(piece))
-        local.group_bys = list(query.group_bys)
-        local.aggregations = [
-            AggOperation(
-                AggregationOperationType.AGGREGATION,
-                agg_type,
-                list(operands or []),
-                alias="v",
-            )
-        ]
+        local = _single_aggregate(
+            sub_query(set(piece)), agg_type, operands, query.group_bys
+        )
         rows = m.confidence_interval(local, confidence=0.95)  # sd is z-free
         anchor = {
             tuple(r[c] for c in gb_cols): (float(r["est"]), float(r["sd"]))
@@ -1895,76 +1665,27 @@ class SPNEnsemble:
         nn = [Condition(t, c, "IS_NOT_NULL") for t, c in (operands or [])] + [
             Condition(gt, gc, "IS_NOT_NULL") for gt, gc in query.group_bys
         ]
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions) + nn,
-        )
-        # for SUM the chain scales the NOT-NULL count mass; the anchor
-        # total of the SUM rows is replaced by the anchor's nn-count
-        # total so the ratio is count-over-count
+        chain, sd_chain = self._factorized_count_moments(_with_conditions(query, nn))
+        rel_chain = (sd_chain / chain) ** 2 if chain > 0 else 0.0
         if agg_type is AggregationType.COUNT:
-            chain, sd_chain = self._factorized_count_moments(qc)
             scale = chain / tot
-            rel_chain = (sd_chain / chain) ** 2 if chain > 0 else 0.0
         else:
-            chain, sd_chain = self._factorized_count_moments(qc)
-            cnt_local = sub_query(set(piece))
-            cnt_local.group_bys = list(query.group_bys)
-            cnt_local.aggregations = [
-                AggOperation(
-                    AggregationOperationType.AGGREGATION,
-                    AggregationType.COUNT,
-                    list(operands or []),
-                    alias="v",
-                )
-            ]
+            # for SUM the chain scales the NOT-NULL count mass; the
+            # anchor total of the SUM rows is replaced by the anchor's
+            # nn-count total so the ratio is count-over-count
+            cnt_local = _single_aggregate(
+                sub_query(set(piece)), AggregationType.COUNT, operands, query.group_bys
+            )
             tot_nn = sum(float(r["v"]) for r in m.aqp(cnt_local))
             if tot_nn <= 0:
                 return {}
             scale = chain / tot_nn
-            rel_chain = (sd_chain / chain) ** 2 if chain > 0 else 0.0
         out: dict[tuple, tuple[float, float]] = {}
         for key, (e, sd) in anchor.items():
             est = e * scale
             rel = rel_chain + ((sd / e) ** 2 if e != 0 else 0.0)
-            out[key] = (est, abs(est) * _m.sqrt(rel))
+            out[key] = (est, abs(est) * math.sqrt(rel))
         return out
-
-    def _ie_grouped_distinct_count(
-        self, query: Query, col_ref: tuple[str, str], gb_cols: list[str]
-    ) -> dict[tuple, float]:
-        """Grouped distinct count under cross-column OR: sign the
-        per-(group, value) MASSES across inclusion-exclusion terms
-        (P(gb=g AND col=v AND ·) is linear in the row indicator, so
-        IE applies cell-wise), then take the expected-rows threshold
-        per cell on the COMBINED mass and count surviving values per
-        group. Signing thresholded per-term counts would be wrong for
-        the same reason as the ungrouped case (_ie_distinct_count).
-        Visible groups follow the aqp rule: a group appears iff some
-        POSITIVE term gives it combined expected rows >= 0.5."""
-        # combine in EXPECTED-ROW units (each term's own
-        # full_join_size): terms answered by different models must not
-        # mix probability masses over different denominators. Terms
-        # over table sets no single model covers ride the factorized
-        # per-(group, value) masses (round 7).
-        acc: dict[tuple, dict] = {}
-        pos_keys: set[tuple] = set()
-        for s, q in self._ie_terms(query):
-            gm = self._chain_grouped_value_masses(q, gb_cols, col_ref)
-            for key, vm in gm.items():
-                if s > 0 and sum(vm.values()) >= 0.5:
-                    pos_keys.add(key)
-                slot = acc.setdefault(key, {})
-                for v, rows in vm.items():
-                    slot[v] = slot.get(v, 0.0) + s * rows
-        return {
-            key: float(
-                sum(1 for rows in acc.get(key, {}).values() if rows >= 0.5)
-            )
-            for key in pos_keys
-        }
 
     def _chain_grouped_value_masses(
         self, query: Query, gb_cols: list[str], col_ref: tuple[str, str]
@@ -1982,8 +1703,6 @@ class SPNEnsemble:
         conditions and the pinned conjunctive query's UNGROUPED
         per-value masses answer per key — the grouped analogue of the
         split-anchor distinct m19 proves."""
-        from ..plans.query import Condition
-
         t, c = col_ref
         try:
             model = self.select_model(query)
@@ -2000,20 +1719,19 @@ class SPNEnsemble:
         anchor = self._grouped_anchor(query, need, component)
         if anchor is None:
             keys = self._cross_piece_group_keys(query, component, sub_query)
-            out: dict[tuple, dict] = {}
-            for k in keys:
-                qk = Query(
-                    query_type=QueryType.CARDINALITY,
-                    table_set=set(query.table_set),
-                    relationship_set=set(query.relationship_set),
-                    conditions=list(query.conditions)
-                    + [
-                        Condition(gt, gc, "=", v)
-                        for (gt, gc), v in zip(query.group_bys, k)
-                    ],
+            return {
+                k: self._chain_value_masses(
+                    _with_conditions(
+                        query,
+                        [
+                            Condition(gt, gc, "=", v)
+                            for (gt, gc), v in zip(query.group_bys, k)
+                        ],
+                    ),
+                    col_ref,
                 )
-                out[k] = self._chain_value_masses(qk, col_ref)
-            return out
+                for k in keys
+            }
         m, piece = anchor
         gm, fjs = m._grouped_value_masses(gb_cols, c, sub_query(set(piece)))
         tot = fjs * sum(mass for vm in gm.values() for mass in vm.values())
@@ -2022,18 +1740,17 @@ class SPNEnsemble:
         # the grid's domains exclude NULLs on EVERY axis (group axes
         # and the distinct column), so the chain must pin NOT NULL on
         # all of them — else sc inflates by the null-group row mass
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions)
-            + [Condition(t, c, "IS_NOT_NULL")]
-            + [
-                Condition(gt, gc, "IS_NOT_NULL")
-                for gt, gc in query.group_bys
-            ],
+        sc = (
+            self._chain_count(
+                query,
+                [Condition(t, c, "IS_NOT_NULL")]
+                + [
+                    Condition(gt, gc, "IS_NOT_NULL")
+                    for gt, gc in query.group_bys
+                ],
+            )
+            / tot
         )
-        sc = float(self.cardinality(qc)) / tot
         return {
             k: {v: fjs * mass * sc for v, mass in vm.items()}
             for k, vm in gm.items()
@@ -2046,33 +1763,24 @@ class SPNEnsemble:
         combine per-VALUE masses by signed sums; multi-column requests
         sign the full cross grid cell-wise (round 6: the grouped
         machinery reused with the leading columns as grid axes) and
-        threshold each cell's COMBINED expected rows."""
-        if self._complex_or_index(query) is not None:
-            if len(cols) == 1:
-                return self._ie_distinct_count(
-                    query, self._col_ref(cols[0], query)
-                )
-            # multi-column: per-term (leading-cols x last-col) mass
-            # grids, signed in expected-row units per cell, then the
-            # 0.5-expected-rows threshold on the combined cell mass —
-            # same set-algebra argument as the grouped case
-            acc: dict[tuple, float] = {}
-            for s, q in self._ie_terms(query):
-                for cell, rows in self._chain_cell_masses(q, cols).items():
-                    acc[cell] = acc.get(cell, 0.0) + s * rows
-            return float(sum(1 for rows in acc.values() if rows >= 0.5))
-        try:
-            model = self.select_model(query)
-        except ValueError:
-            # table set no single model covers: factorized per-value /
-            # per-cell masses, thresholded (round 7)
-            if len(cols) == 1:
-                return self._factorized_distinct(
-                    query, self._col_ref(cols[0], query)
-                )
-            cells = self._chain_cell_masses(query, cols)
-            return float(sum(1 for rows in cells.values() if rows >= 0.5))
-        return model.distinct_count(cols, query)
+        threshold each cell's COMBINED expected rows. Table sets no
+        single model covers threshold the factorized per-value /
+        per-cell masses (round 7)."""
+        if self._complex_or_index(query) is None:
+            try:
+                model = self.select_model(query)
+            except ValueError:
+                model = None
+            if model is not None:
+                return model.distinct_count(cols, query)
+        if len(cols) == 1:
+            return self._distinct_counts(query, self._col_ref(cols[0], query))[()]
+        # multi-column: per-term (leading-cols x last-col) mass grids,
+        # signed in expected-row units per cell, then the
+        # 0.5-expected-rows threshold on the combined cell mass — same
+        # set-algebra argument as the grouped case
+        cells, _ = self._signed_sum(query, lambda q: self._chain_cell_masses(q, cols))
+        return self._threshold_count(cells.values())
 
     def _chain_cell_masses(
         self, query: Query, cols: list[str]
@@ -2085,8 +1793,6 @@ class SPNEnsemble:
         chain's all-operands-NOT-NULL count over the anchor's total
         (grids exclude null values by construction, so the two measure
         the same rows)."""
-        from ..plans.query import Condition
-
         refs = [self._col_ref(c, query) for c in cols]
         try:
             model = self.select_model(query)
@@ -2104,14 +1810,8 @@ class SPNEnsemble:
         tot = fjs * sum(mass for vm in gm.values() for mass in vm.values())
         if tot <= 0:
             return {}
-        qc = Query(
-            query_type=QueryType.CARDINALITY,
-            table_set=set(query.table_set),
-            relationship_set=set(query.relationship_set),
-            conditions=list(query.conditions)
-            + [Condition(t, c, "IS_NOT_NULL") for t, c in refs],
-        )
-        sc = float(self.cardinality(qc)) / tot
+        nn = [Condition(t, c, "IS_NOT_NULL") for t, c in refs]
+        sc = self._chain_count(query, nn) / tot
         return {
             key + (v,): fjs * mass * sc
             for key, vm in gm.items()
@@ -2126,8 +1826,6 @@ class SPNEnsemble:
         P(col = v AND (A or B)) is linear in the indicator, so
         inclusion-exclusion applies pointwise; negative residue from
         approximation error clamps at zero."""
-        import numpy as np
-
         if self._complex_or_index(query) is None:
             return self.select_model(query).quantile(col, qs, query)
         # type-check BEFORE the per-term grid passes: a wide OR group
@@ -2137,12 +1835,12 @@ class SPNEnsemble:
             raise ValueError(
                 f"quantiles need a numeric column; '{col}' is categorical"
             )
-        acc: dict[float, float] = {}
-        for s, q in self._ie_terms(query):
-            model = self.select_model(q)
-            dom, masses = model._value_masses(col, q)
-            for v, m in zip(dom, masses):
-                acc[float(v)] = acc.get(float(v), 0.0) + s * float(m)
+
+        def per_term(q: Query) -> dict[float, float]:
+            dom, masses = self.select_model(q)._value_masses(col, q)
+            return {float(v): float(m) for v, m in zip(dom, masses)}
+
+        acc, _ = self._signed_sum(query, per_term)
         items = sorted((v, max(m, 0.0)) for v, m in acc.items())
         total = sum(m for _, m in items)
         if not items or total <= 0:
@@ -2216,87 +1914,46 @@ class SPNEnsemble:
         Terms whose table set NO single model covers get their
         (est, sd) from the factor chain: COUNT via
         _factorized_count_moments, SUM via _factorized_sum_moments
-        (anchor AVG × count chain, round 6) — grouped multi-model
-        terms stay exact-plane. COUNT(DISTINCT) gets Poisson-occupancy
-        moments over the signed per-value masses
-        (_distinct_occupancy_moments, grouped via
-        _grouped_distinct_occupancy_moments — round 8); HAVING filters
-        groups by their point estimates (round 8 — same approximation
-        class as aqp's HAVING)."""
-        from ..plans.query import (
-            AggOperation,
-            AggregationOperationType,
-            AggregationType,
-            Condition,
-        )
-        from .model import z_value
-
+        (anchor AVG × count chain, round 6), grouped via
+        _factorized_grouped_ci_moments (round 8). COUNT(DISTINCT) gets
+        Poisson-occupancy moments over the signed per-value masses
+        (_occupancy_moments — round 8); HAVING filters groups by their
+        point estimates (round 8 — same approximation class as aqp's
+        HAVING)."""
         z = z_value(confidence)
         gb_cols = [c for _t, c in query.group_bys]
-        terms = []
-        for sign, q in self._ie_terms(query):
-            try:
-                terms.append((sign, q, self.select_model(q)))
-            except ValueError:
-                # no single model covers the term's table set: the
-                # factorized chain supplies (est, sd) via the delta
-                # method over its factors (_factorized_count_moments)
-                terms.append((sign, q, None))
         visible: set[tuple] = set() if gb_cols else {()}
 
-        def signed_moments(agg_type, operands, extra_cond=None):
-            """{group key: [signed est, summed variance]} for ONE
-            aggregate, evaluated per signed term; positive terms'
-            keys feed the shared `visible` set (the aqp rule)."""
-            acc: dict[tuple, list[float]] = {}
-            for sign, q, model in terms:
-                q1 = Query(
-                    query_type=q.query_type,
-                    table_set=set(q.table_set),
-                    relationship_set=set(q.relationship_set),
-                    conditions=list(q.conditions)
-                    + ([extra_cond] if extra_cond is not None else []),
-                    group_bys=list(q.group_bys),
-                    aggregations=[
-                        AggOperation(
-                            AggregationOperationType.AGGREGATION,
-                            agg_type,
-                            list(operands or []),
-                            alias="v",
-                        )
-                    ],
-                )
+        def signed_moments(agg_type, operands, extra=()):
+            """{group key: (signed est, summed variance)} for ONE
+            aggregate (_signed_sum); positive terms' keys feed the
+            shared `visible` set (the aqp rule)."""
+
+            def per_term(q: Query) -> dict[tuple, tuple[float, float]]:
+                q1 = _single_aggregate(q, agg_type, operands, q.group_bys, extra)
+                try:
+                    model = self.select_model(q)
+                except ValueError:
+                    model = None
                 if model is None:
+                    # no single model covers the term's table set: the
+                    # factorized chain supplies (est, sd) via the delta
+                    # method over its factors
                     if gb_cols:
                         moments = self._factorized_grouped_ci_moments(
                             q1, agg_type, list(operands or [])
                         )
-                        for key, (est, sd) in moments.items():
-                            if sign > 0:
-                                visible.add(key)
-                            slot = acc.setdefault(key, [0.0, 0.0])
-                            slot[0] += sign * est
-                            slot[1] += sd * sd
-                        continue
-                    if agg_type is AggregationType.COUNT:
-                        est, sd = self._factorized_count_moments(q1)
+                    elif agg_type is AggregationType.COUNT:
+                        moments = {(): self._factorized_count_moments(q1)}
                     else:  # SUM; the AVG output composes from the
                         # signed SUM and signed not-null-COUNT moments
                         # in the generic per_op code below
-                        est, sd = self._factorized_sum_moments(
-                            q1, list(operands)
-                        )
-                    key = ()
-                    if sign > 0:
-                        visible.add(key)
-                    slot = acc.setdefault(key, [0.0, 0.0])
-                    slot[0] += sign * est
-                    slot[1] += sd * sd
-                    continue
+                        moments = {
+                            (): self._factorized_sum_moments(q1, list(operands))
+                        }
+                    return {k: (est, sd * sd) for k, (est, sd) in moments.items()}
+                out = {}
                 for row in model.confidence_interval(q1, confidence):
-                    key = tuple(row[c] for c in gb_cols)
-                    if sign > 0:
-                        visible.add(key)
                     # prefer the model's UNCLAMPED sd: the COUNT row's
                     # lo is clamped at 0 for presentation, so
                     # (hi-lo)/2z understates sd by up to 2x whenever
@@ -2305,30 +1962,23 @@ class SPNEnsemble:
                     sd = row.get("sd")
                     if sd is None:
                         sd = (row["hi"] - row["lo"]) / (2.0 * z)
-                    slot = acc.setdefault(key, [0.0, 0.0])
-                    slot[0] += sign * row["est"]
-                    slot[1] += sd * sd
-            return acc
+                    out[tuple(row[c] for c in gb_cols)] = (row["est"], sd * sd)
+                return out
+
+            total, keys = self._signed_sum(query, per_term)
+            visible.update(keys)
+            return total
 
         per_op: list[tuple[str, str, dict]] = []  # (name, kind, moments)
         for op in query.aggregations:
             if op.op_type is not AggregationOperationType.AGGREGATION:
                 continue
-            if getattr(op, "distinct", False):
+            if op.distinct:
                 # round 8: Poisson-occupancy moments replace the
                 # refusal — grouped via per-(group, value) masses
                 name = op.alias or "count_distinct"
-                if gb_cols:
-                    moments = self._grouped_distinct_occupancy_moments(
-                        query, op.operands[0], gb_cols
-                    )
-                    visible.update(moments)
-                else:
-                    moments = {
-                        (): self._distinct_occupancy_moments(
-                            query, op.operands[0]
-                        )
-                    }
+                moments = self._occupancy_moments(query, op.operands[0], gb_cols)
+                visible.update(moments)
                 per_op.append((name, "count", moments))
             elif op.agg_type is AggregationType.COUNT:
                 name = op.alias or "count"
@@ -2345,9 +1995,7 @@ class SPNEnsemble:
                 t, c = op.operands[0]
                 s_m = signed_moments(AggregationType.SUM, op.operands)
                 c_m = signed_moments(
-                    AggregationType.COUNT,
-                    [],
-                    extra_cond=Condition(t, c, "IS_NOT_NULL"),
+                    AggregationType.COUNT, [], [Condition(t, c, "IS_NOT_NULL")]
                 )
                 ratio: dict[tuple, list[float]] = {}
                 for key in set(s_m) | set(c_m):
@@ -2361,8 +2009,6 @@ class SPNEnsemble:
                         var_s / (C * C) + (S * S) * var_c / (C**4),
                     ]
                 per_op.append((name, "avg", ratio))
-        from .model import _apply_having
-
         out: list[dict] = []
         for key in sorted(visible, key=repr):
             key_rows: list[dict] = []
@@ -2394,10 +2040,6 @@ class SPNEnsemble:
         """Ensemble observability (paper parity: ensembles are
         MB-scale and ship to a driver): per-model node/leaf/value
         counts and pickled size in bytes."""
-        import pickle
-
-        from .nodes import iter_leaves
-
         models = []
         for m in self.models:
             leaves = list(iter_leaves(m.root))

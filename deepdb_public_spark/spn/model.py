@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math as _math
+import operator as _operator
 import re as _re
 from dataclasses import dataclass, field
 
@@ -85,6 +86,53 @@ def _apply_having(rows: list[dict], having) -> list[dict]:
         if keep:
             out.append(r)
     return out
+
+
+def _fold_aggregates(query: Query, value_of, groups=None) -> list[dict]:
+    """The model plane's one aggregate fold: ``query.aggregations``
+    (AGGREGATION starts an output, PLUS/MINUS extend it; an unaliased
+    output is named ``agg_{n}``) fold into named outputs, one row per
+    group, then HAVING. ``value_of(op)`` answers one aggregate: a
+    scalar when ungrouped (``groups`` None: one row), else a numpy grid
+    or a {group key: value} dict; PLUS/MINUS combine dicts key-wise, a
+    missing key counting 0.0. ``groups()`` lists the (group key, cell)
+    pairs to emit, in order. It is called once every aggregate is
+    answered, so a caller may learn its visible keys while answering."""
+    outputs: list[tuple[str, object]] = []
+    acc = alias = None
+    for op in query.aggregations:
+        val = value_of(op)
+        if op.op_type is AggregationOperationType.AGGREGATION:
+            if acc is not None:
+                outputs.append((alias or f"agg_{len(outputs)}", acc))
+            acc, alias = val, op.alias
+            continue
+        f = (
+            _operator.add
+            if op.op_type is AggregationOperationType.PLUS
+            else _operator.sub
+        )
+        if isinstance(acc, dict):
+            acc = {
+                k: f(acc.get(k, 0.0), val.get(k, 0.0))
+                for k in acc.keys() | val.keys()
+            }
+        else:
+            acc = f(acc, val)
+    if acc is not None:
+        outputs.append((alias or f"agg_{len(outputs)}", acc))
+    if groups is None:
+        return _apply_having([dict(outputs)], query.having)
+    gb_cols = [c for _t, c in query.group_bys]
+    rows = []
+    for key, cell in groups():
+        row = dict(zip(gb_cols, key))
+        for name, val in outputs:
+            row[name] = (
+                val.get(cell, 0.0) if isinstance(val, dict) else float(val[cell])
+            )
+        rows.append(row)
+    return _apply_having(rows, query.having)
 
 
 def _like_to_regex(pattern: str) -> "_re.Pattern":
@@ -239,7 +287,9 @@ class SPNModel:
         # derived caches stay out of the pickle: its size must not
         # grow with the number of reads already answered
         state = dict(self.__dict__)
-        for k in ("_eval_cache", "_col_index_map", "cache_hits", "cache_misses"):
+        for k in (
+            "_eval_cache", "_col_index_map", "_decoders", "cache_hits", "cache_misses"
+        ):
             state.pop(k, None)
         return state
 
@@ -273,6 +323,24 @@ class SPNModel:
                 f"(> {MAX_GROUPBY_CELLS}); use the exact plane"
             )
         return axes
+
+    def _decoder(self, col: str):
+        """code -> original value of ``col``: a categorical column's
+        dictionary codes decode through its inverse map, built once per
+        column; any other value is a float. Every decoded group key and
+        per-value mass goes through here, so keys from different models
+        (each with its own dictionary) combine."""
+        decoders = self.__dict__.setdefault("_decoders", {})
+        dec = decoders.get(col)
+        if dec is None:
+            cm = self.meta.columns[col]
+            if cm.kind == "categorical" and cm.value_to_code:
+                inv = {code: v for v, code in cm.value_to_code.items()}
+                dec = lambda code: inv.get(int(code), float(code))  # noqa: E731
+            else:
+                dec = float
+            decoders[col] = dec
+        return dec
 
     # -- condition translation ----------------------------------------
     def _col_index(self, col: str) -> int:
@@ -709,14 +777,10 @@ class SPNModel:
             # fanout, so no multiplier features apply
             return self.distinct_count([operands[0][1]], query)
         if agg_type is AggregationType.COUNT:
-            if operands:
-                # COUNT(col): SQL semantics skip NULLs in col
-                cond = dict(cond)
-                for t, c in operands:
-                    i = self._col_index(c)
-                    nn = self._condition_to_range(Condition(t, c, "IS_NOT_NULL"))
-                    cond[i] = intersect_ranges(cond[i], nn) if i in cond else nn
-            return self.full_join_size * self._eval(cond, feats)
+            # COUNT(col): SQL semantics skip NULLs in col
+            return self.full_join_size * self._eval(
+                self._notnull_cond(cond, operands), feats
+            )
         for _t, c in operands:
             feats[self._col_index(c)] = _identity
         val = self.full_join_size * self._eval(cond, feats)
@@ -831,15 +895,7 @@ class SPNModel:
         grid = np.asarray(
             evaluate_groupby(self.root, cond, features, axes), dtype=np.float64
         )
-
-        def _decoder(c: str):
-            cm = self.meta.columns[c]
-            if cm.kind == "categorical" and cm.value_to_code:
-                inv = {v: k for k, v in cm.value_to_code.items()}
-                return lambda code: inv.get(int(code), float(code))
-            return float
-
-        gb_dec = [_decoder(c) for c in gb_cols]
+        gb_dec = [self._decoder(c) for c in gb_cols]
         out: dict[tuple, dict] = {}
         if ci in gb_idx:
             pos = gb_idx.index(ci)
@@ -851,7 +907,7 @@ class SPNModel:
                 vm = out.setdefault(key, {})
                 vm[key[pos]] = vm.get(key[pos], 0.0) + float(grid[tuple(idx)])
             return out, self.full_join_size
-        col_dec = _decoder(col)
+        col_dec = self._decoder(col)
         dec_vals = [col_dec(v) for v in axes[ci]]
         grid = grid.reshape([len(axes[i]) for i in gb_idx] + [len(axes[ci])])
         for idx in np.ndindex(*(len(axes[i]) for i in gb_idx)):
@@ -902,31 +958,13 @@ class SPNModel:
         extra, features = self.correction_factors(query)
         base_cond.update(extra)
 
-        def eval_aggs(cond) -> dict:
-            row: dict = {}
-            acc = None
-            alias = None
-            for i, op in enumerate(query.aggregations):
-                val = self._agg_value(
-                    query,
-                    (op.agg_type, op.operands, op.distinct),
-                    cond,
-                    features,
-                )
-                if op.op_type is AggregationOperationType.AGGREGATION:
-                    if acc is not None:
-                        row[alias or f"agg_{len(row)}"] = acc
-                    acc, alias = val, op.alias
-                elif op.op_type is AggregationOperationType.PLUS:
-                    acc += val
-                else:
-                    acc -= val
-            if acc is not None:
-                row[alias or f"agg_{len(row)}"] = acc
-            return row
-
         if not query.group_bys:
-            return _apply_having([eval_aggs(base_cond)], query.having)
+            return _fold_aggregates(
+                query,
+                lambda op: self._agg_value(
+                    query, (op.agg_type, op.operands, op.distinct), base_cond, features
+                ),
+            )
 
         # group-by (reference B9 + B8): the model-side distinct combos
         # form a grid; evaluate_groupby computes EVERY combination in
@@ -980,28 +1018,21 @@ class SPNModel:
                     .sum(axis=-1)
                     .astype(np.float64)
                 )
+            # COUNT(col) and the AVG denominator exclude operand NULLs
+            # (SQL semantics); group axes are never NULL so only
+            # non-axis operands add a restriction
+            ops_off_axis = [
+                (t, c) for t, c in op.operands if self._col_index(c) not in axes
+            ]
             if op.agg_type is AggregationType.COUNT:
                 if not op.operands:
                     return count_grid
-                cond = dict(cond_rest)
-                for t, c in op.operands:
-                    i = self._col_index(c)
-                    if i in axes:  # group values are never NULL
-                        continue
-                    nn = self._condition_to_range(Condition(t, c, "IS_NOT_NULL"))
-                    cond[i] = intersect_ranges(cond[i], nn) if i in cond else nn
-                return grid(feats, cond)
+                return grid(feats, self._notnull_cond(cond_rest, ops_off_axis))
             for _t, c in op.operands:
                 feats[self._col_index(c)] = _identity
             val = grid(feats)
             if op.agg_type is AggregationType.SUM:
                 return val
-            # AVG denominator excludes operand NULLs (SQL semantics);
-            # group axes are never NULL so only non-axis operands add
-            # a restriction
-            ops_off_axis = [
-                (t, c) for t, c in op.operands if self._col_index(c) not in axes
-            ]
             den = (
                 grid(features, self._notnull_cond(cond_rest, ops_off_axis))
                 if ops_off_axis
@@ -1010,48 +1041,17 @@ class SPNModel:
             with np.errstate(divide="ignore", invalid="ignore"):
                 return np.where(den > 0, val / den, np.nan)
 
-        agg_outputs: list[tuple[str, np.ndarray]] = []
-        acc = None
-        alias = None
-        for op in query.aggregations:
-            g = agg_grid(op)
-            if op.op_type is AggregationOperationType.AGGREGATION:
-                if acc is not None:
-                    agg_outputs.append((alias or f"agg_{len(agg_outputs)}", acc))
-                acc, alias = g, op.alias
-            elif op.op_type is AggregationOperationType.PLUS:
-                acc = acc + g
-            else:
-                acc = acc - g
-        if acc is not None:
-            agg_outputs.append((alias or f"agg_{len(agg_outputs)}", acc))
+        def groups() -> list[tuple[tuple, tuple]]:
+            decoded = [
+                [self._decoder(c)(v) for v in axes[i]]
+                for c, i in zip(gb_cols, gb_idx)
+            ]
+            return [
+                (tuple(dec[j] for dec, j in zip(decoded, idx)), tuple(idx))
+                for idx in np.argwhere(count_grid >= 0.5)
+            ]
 
-        # build each inverse dictionary ONCE per group-by column (a
-        # per-value rebuild is O(n_axis * n_distinct))
-        inv_maps = {}
-        for c in gb_cols:
-            cm = self.meta.columns[c]
-            if cm.kind == "categorical" and cm.value_to_code is not None:
-                inv_maps[c] = {v: k for k, v in cm.value_to_code.items()}
-
-        def decode(col: str, code: float):
-            inv = inv_maps.get(col)
-            if inv is not None:
-                return inv.get(int(code), code)
-            return code
-
-        decoders = [
-            [decode(c, v) for v in axes[i]] for c, i in zip(gb_cols, gb_idx)
-        ]
-        out: list[dict] = []
-        for idx in np.argwhere(count_grid >= 0.5):
-            row = {
-                c: decoders[a][j] for a, (c, j) in enumerate(zip(gb_cols, idx))
-            }
-            for name, g in agg_outputs:
-                row[name] = float(g[tuple(idx)])
-            out.append(row)
-        return _apply_having(out, query.having)
+        return _fold_aggregates(query, agg_grid, groups)
 
     # -- confidence intervals (reference B10, simplified) --------------
     def confidence_interval(
@@ -1087,25 +1087,18 @@ class SPNModel:
             count_grid = self.full_join_size * evaluate_groupby(
                 self.root, cond, features, axes
             )
-            inv_maps = {
-                c: {v: k for k, v in self.meta.columns[c].value_to_code.items()}
-                for c in gb_cols
-                if self.meta.columns[c].kind == "categorical"
-                and self.meta.columns[c].value_to_code
-            }
+            decoders = [self._decoder(c) for c in gb_cols]
             out: list[dict] = []
             for idx in np.argwhere(count_grid >= 0.5):
                 combo_cond = dict(cond)
                 group_vals: dict = {}
                 for a, (c, i) in enumerate(zip(gb_cols, gb_idx)):
                     code = float(axes[i][idx[a]])
-                    cm = self.meta.columns[c]
-                    if cm.kind == "categorical":
+                    if self.meta.columns[c].kind == "categorical":
                         combo_cond[i] = NominalRange([int(code)])
-                        group_vals[c] = inv_maps.get(c, {}).get(int(code), code)
                     else:
                         combo_cond[i] = NumericRange([(code, code, True, True)])
-                        group_vals[c] = code
+                    group_vals[c] = decoders[a](code)
                 rows_k = self._ci_rows(query, combo_cond, features, z)
                 # HAVING on the CI plane (round 8, was a refusal):
                 # group membership is decided on the POINT estimates —

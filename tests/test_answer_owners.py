@@ -1,0 +1,96 @@
+"""Static guard: each piece of the model plane's answer algebra has one
+owner (README "Model-plane answer algebra").
+
+- AggregationOperationType.PLUS is read only in the aggregate fold
+  (spn/model.py::_fold_aggregates);
+- inclusion-exclusion terms are expanded only by the signed-term sum
+  (SPNEnsemble._signed_sum) and by _ie_terms' own recursion;
+- a dictionary's value_to_code map is inverted only by the decoder
+  (SPNModel._decoder).
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+PACKAGE = sorted((REPO / "deepdb_public_spark").rglob("*.py"))
+
+
+def _owners(files: list[Path], match) -> set[tuple[str, str]]:
+    """(file, function or method) holding a node ``match`` accepts; a
+    nested helper counts as the function it is defined in."""
+    out = set()
+    for path in files:
+        scopes: list[tuple[str, ast.AST]] = []
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.ClassDef):
+                scopes.extend(
+                    (n.name if isinstance(n, ast.FunctionDef) else "<class>", n)
+                    for n in node.body
+                )
+            else:
+                name = node.name if isinstance(node, ast.FunctionDef) else "<module>"
+                scopes.append((name, node))
+        for name, scope in scopes:
+            if any(match(n) for n in ast.walk(scope)):
+                out.add((str(path.relative_to(REPO)), name))
+    return out
+
+
+def _is_plus(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "PLUS"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "AggregationOperationType"
+    )
+
+
+def _calls_ie_terms(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "_ie_terms"
+    )
+
+
+def _inverts_dictionary(node: ast.AST) -> bool:
+    """{code: value for value, code in X.value_to_code.items()}."""
+    if not isinstance(node, ast.DictComp) or len(node.generators) != 1:
+        return False
+    gen = node.generators[0]
+    it, target = gen.iter, gen.target
+    return (
+        isinstance(it, ast.Call)
+        and isinstance(it.func, ast.Attribute)
+        and it.func.attr == "items"
+        and isinstance(it.func.value, ast.Attribute)
+        and it.func.value.attr == "value_to_code"
+        and isinstance(target, ast.Tuple)
+        and len(target.elts) == 2
+        and isinstance(node.key, ast.Name)
+        and isinstance(target.elts[1], ast.Name)
+        and node.key.id == target.elts[1].id
+    )
+
+
+def test_aggregate_fold_is_the_only_reader_of_plus():
+    spn = [p for p in PACKAGE if p.parent.name == "spn"]
+    assert _owners(spn, _is_plus) == {
+        ("deepdb_public_spark/spn/model.py", "_fold_aggregates")
+    }
+
+
+def test_signed_sum_is_the_only_expander_of_ie_terms():
+    assert _owners(PACKAGE + [REPO / "__spark_entry__.py"], _calls_ie_terms) == {
+        ("deepdb_public_spark/spn/ensemble.py", "_signed_sum"),
+        ("deepdb_public_spark/spn/ensemble.py", "_ie_terms"),
+    }
+
+
+def test_decoder_is_the_only_inverse_dictionary():
+    assert _owners(PACKAGE + [REPO / "__spark_entry__.py"], _inverts_dictionary) == {
+        ("deepdb_public_spark/spn/model.py", "_decoder")
+    }

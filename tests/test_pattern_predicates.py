@@ -365,7 +365,7 @@ def test_join_scope_quantile_applies_corrections(joint_engine):
 def test_grouped_count_distinct_or_model_plane(engines):
     """Round 6: grouped COUNT(DISTINCT) under cross-column OR is now
     answered ON the model plane (signed per-(group, value) masses,
-    SPNEnsemble._ie_grouped_distinct_count) instead of raising
+    SPNEnsemble._signed_masses) instead of raising
     ModelPlaneUnsupported — per-group estimates must track the exact
     plane within a tight q-error budget."""
     eng = engines
