@@ -26,7 +26,9 @@ from collections import Counter
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from ..operators.prep import encode_table
 from ..plans.query import (
     AggOperation,
     AggregationOperationType,
@@ -47,6 +49,7 @@ from .model import (
     z_value,
 )
 from .nodes import iter_leaves
+from .rdc import rdc_matrix
 from .trainer import train_spn_model
 
 # Cross-piece grouped estimates price EVERY group key with its own
@@ -2114,11 +2117,6 @@ def score_fk_edges(
     construction and would score every edge ~1. The probe runs on a
     bounded inner-join sample (the reference subsamples
     identically)."""
-    import numpy as np
-
-    from ..operators.prep import encode_table
-    from .rdc import rdc_matrix
-
     key_cols: set[str] = set()
     for r in schema.relationships.values():
         key_cols |= {r.start_attr, r.end_attr}
@@ -2171,8 +2169,6 @@ def _strip_side(col: str) -> str:
 def _prefixed_edge_join(catalog: dict[str, DataFrame], rel):
     """Inner-join an FK edge with side-prefixed column names so shared
     names across the two tables never collide."""
-    from pyspark.sql import functions as F
-
     s_pfx, e_pfx = _SIDE_PREFIXES
     sdf = catalog[rel.start].select(
         *[F.col(c).alias(f"{s_pfx}{c}") for c in catalog[rel.start].columns]
@@ -2199,11 +2195,6 @@ def compute_pairwise_rdc(
     like score_fk_edges). The result is the reference's
     pairwise_rdc_path artifact: persisted with the ensemble and
     consumed by enable_rdc_selection at query time."""
-    import numpy as np
-
-    from ..operators.prep import encode_table
-    from .rdc import rdc_matrix
-
     key_cols: set[str] = set()
     for r in schema.relationships.values():
         key_cols |= {r.start_attr, r.end_attr}

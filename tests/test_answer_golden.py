@@ -36,10 +36,10 @@ import numpy as np
 import pytest
 
 from deepdb_public_spark.plans.parser import parse_query
+from tests.conftest import SF_SMOKE as SF
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(ROOT, "tests", "answer_golden.json")
-SF = "/root/testdata/sf0.001"
 TOL = 1e-9
 BUDGET = 60_000
 TABLES = {"lineitem", "orders", "customer"}
