@@ -257,7 +257,10 @@ def evaluate_aqp(
         model_by = {key(r): r for r in model_rows}
         exact_by = {key(r): r for r in exact_rows}
         agg_cols = [c for c in (exact_rows[0] if exact_rows else {}) if c not in gb]
-        for k in set(model_by) | set(exact_by):
+        # sorted (by repr, as the model plane's folds order keys): set
+        # order follows the per-process string hash, so rows would
+        # reorder between two runs of the same code
+        for k in sorted(model_by.keys() | exact_by.keys(), key=repr):
             if k not in model_by or k not in exact_by:
                 rows.append((sql, k, None, 1.0, latency))
                 continue

@@ -46,6 +46,7 @@ from .model import (
     SPNModel,
     _apply_having,
     _fold_aggregates,
+    _refuse_composite_ci,
     z_value,
 )
 from .nodes import iter_leaves
@@ -1922,7 +1923,9 @@ class SPNEnsemble:
         Poisson-occupancy moments over the signed per-value masses
         (_occupancy_moments — round 8); HAVING filters groups by their
         point estimates (round 8 — same approximation class as aqp's
-        HAVING)."""
+        HAVING). Composite aggregates (agg ± agg) raise
+        ModelPlaneUnsupported, as on the single-model path."""
+        _refuse_composite_ci(query)
         z = z_value(confidence)
         gb_cols = [c for _t, c in query.group_bys]
         visible: set[tuple] = set() if gb_cols else {()}
@@ -1974,8 +1977,6 @@ class SPNEnsemble:
 
         per_op: list[tuple[str, str, dict]] = []  # (name, kind, moments)
         for op in query.aggregations:
-            if op.op_type is not AggregationOperationType.AGGREGATION:
-                continue
             if op.distinct:
                 # round 8: Poisson-occupancy moments replace the
                 # refusal — grouped via per-(group, value) masses

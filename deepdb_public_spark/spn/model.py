@@ -28,6 +28,7 @@ import math as _math
 import operator as _operator
 import re as _re
 from dataclasses import dataclass, field
+from types import MappingProxyType
 
 import numpy as np
 
@@ -164,10 +165,12 @@ def _square(x: np.ndarray) -> np.ndarray:
 # feature functions the cache can key on (named, stateless)
 _FEATURE_NAMES = {_inv_max1: "inv", _identity: "id", _square: "sq"}
 
-# factor-cache bound, in entries per model: point values and (value,
-# variance) pairs together. perfbench's ``estimate`` stream leaves
-# about 2,700 entries over its five models per write cycle; past the
-# bound the cache empties and refills.
+# factor-cache bound, in cached floats per model: a point value is 1
+# cell, a (value, variance) pair 2, a grid its cells plus its axes'
+# values, an axis domain its values. perfbench's ``estimate`` stream
+# leaves about 2,700 point entries and under 1,000 grid cells per
+# model per write cycle; past the bound the cache empties and
+# refills, and an entry larger than the bound is never stored.
 EVAL_CACHE_MAX = 8192
 
 
@@ -220,6 +223,22 @@ class ModelPlaneUnsupported(ValueError):
     (Engine.estimate) catch this and fall back to the exact plane."""
 
 
+def _refuse_composite_ci(query: Query) -> None:
+    """Every CI path's refusal of composite aggregates (agg ± agg):
+    the chain's interval needs the covariance between its steps over
+    the SAME rows, which no path here has. Reporting the first step's
+    interval under the chain's name (estimate disagreeing with aqp())
+    was a silent wrong answer."""
+    if any(
+        op.op_type is not AggregationOperationType.AGGREGATION
+        for op in query.aggregations
+    ):
+        raise ModelPlaneUnsupported(
+            "confidence intervals for composite aggregates "
+            "(agg ± agg) are not supported; use the exact plane"
+        )
+
+
 @dataclass
 class SPNModel:
     table_set: set[str]
@@ -241,54 +260,123 @@ class SPNModel:
     fd_maps: dict = field(default_factory=dict)
     # factor cache (B13, reference: IndicatorExpectation.__hash__ +
     # memoization in spn_ensemble.py): repeated expectation factors —
-    # factorization denominators, workload re-runs, repeated CIs — hit
-    # the cache instead of re-walking the tree. Holds at most
-    # EVAL_CACHE_MAX entries; invalidated on incremental updates. Not
-    # pickled (__getstate__), nor are the hit/miss counters.
+    # factorization denominators, workload re-runs, repeated CIs,
+    # repeated group-by grids — hit the cache instead of re-walking the
+    # tree. Holds at most EVAL_CACHE_MAX cells (``_eval_cells``);
+    # invalidated on incremental updates. Not pickled (__getstate__),
+    # nor are the hit/miss counters.
     _eval_cache: dict = field(default_factory=dict, repr=False, compare=False)
+    _eval_cells: int = field(default=0, repr=False, compare=False)
     cache_hits: int = field(default=0, repr=False, compare=False)
     cache_misses: int = field(default=0, repr=False, compare=False)
 
-    def _eval(self, cond: dict[int, Range], features=None, moments: bool = False):
+    def _eval(
+        self,
+        cond: dict[int, Range],
+        features=None,
+        moments: bool = False,
+        axes: list[int] | None = None,
+    ):
         """E[prod features * 1(cond)] from one tree walk, served from
-        the factor cache when the same factor was walked before. With
-        ``moments`` it is the (value, sampling variance) pair of the
-        per-node variance pass (B10), cached under the same key plus a
-        tag."""
+        the factor cache when the same walk was made before. The one
+        owner of every tree walk and every cache entry here:
+
+        - plain: the point value (``evaluate``);
+        - ``moments``: the (value, sampling variance) pair of the
+          per-node variance pass (B10, ``evaluate_with_variance``);
+        - ``axes`` (column indexes): the pair (axes, grid) of a group
+          grid (B8/B9, ``evaluate_groupby``). Each axis enumerates its
+          column's distinct values (``distinct_values``, itself an
+          entry) restricted by and consuming any range on it in
+          ``cond``; the grid holds the expectation over their cross
+          product, capped at MAX_GROUPBY_CELLS (GroupByExplosion).
+
+        A grid is keyed on ``cond`` before its axis ranges are consumed
+        plus the axis columns: the admitted values follow from those
+        ranges and the cached domains, so a hit skips the admission
+        pass. Cached arrays (and the axes mapping) are read-only."""
         key = _factor_key(cond, features)
         if key is not None:
             if moments:
                 key += ("var",)
+            elif axes is not None:
+                key += ("grid", tuple(axes))
             hit = self._eval_cache.get(key)
             if hit is not None:
                 self.cache_hits += 1
+                if axes is not None and hit[1].size > MAX_GROUPBY_CELLS:
+                    # the cap is read per call, not frozen into entries
+                    raise GroupByExplosion(
+                        f"grid has {hit[1].size} cells "
+                        f"(> {MAX_GROUPBY_CELLS}); use the exact plane"
+                    )
                 return hit
+        self.cache_misses += 1
         if moments:
             # looked up at call time, like ``evaluate``: a tracer
             # patches the nodes-module name
             from .nodes import evaluate_with_variance
 
             val = evaluate_with_variance(self.root, cond, features)
+            return self._cache_put(key, val, 2)
+        if axes is None:
+            return self._cache_put(key, evaluate(self.root, cond, features), 1)
+        cond = dict(cond)
+        doms: dict[int, np.ndarray] = {}
+        for i in axes:
+            dom = self._eval_cache.get(("dom", i))
+            if dom is None:
+                dom = distinct_values(self.root, i)
+                dom.setflags(write=False)
+                self._cache_put(("dom", i), dom, len(dom))
+            rng = cond.pop(i, None)
+            if rng is not None:
+                dom = np.array([v for v in dom if value_admitted(rng, v)])
+                dom.setflags(write=False)
+            doms[i] = dom
+        # arbitrary-precision product: an int64 np.prod wraps silently
+        # past 9.2e18 and would bypass the cap on absurd grids
+        n_cells = _math.prod(len(a) for a in doms.values())
+        if n_cells > MAX_GROUPBY_CELLS:
+            raise GroupByExplosion(
+                f"grid over {[self.column_names[i] for i in doms]} has "
+                f"{n_cells} cells (> {MAX_GROUPBY_CELLS}); use the exact plane"
+            )
+        if n_cells == 0:
+            grid = np.zeros(tuple(len(a) for a in doms.values()))
         else:
-            val = evaluate(self.root, cond, features)
-        self.cache_misses += 1
-        if key is not None:
-            if len(self._eval_cache) >= EVAL_CACHE_MAX:
-                self._eval_cache.clear()
-            self._eval_cache[key] = val
+            grid = evaluate_groupby(self.root, cond, features, doms)
+        grid.setflags(write=False)
+        val = (MappingProxyType(doms), grid)
+        return self._cache_put(key, val, n_cells + sum(len(a) for a in doms.values()))
+
+    def _cache_put(self, key, val, cells: int):
+        """Store ``val`` (``cells`` floats) under ``key`` and return
+        it. Past the bound the table empties first; an entry larger
+        than the bound, or with no key, is returned unstored."""
+        if key is None or cells > EVAL_CACHE_MAX:
+            return val
+        if self._eval_cells + cells > EVAL_CACHE_MAX:
+            self._eval_cache.clear()
+            self._eval_cells = 0
+        self._eval_cache[key] = val
+        self._eval_cells += cells
         return val
 
     def invalidate_cache(self) -> None:
-        """Drop every cached factor, point values and variance pairs
-        alike: the one path that keeps the cache true to the tree."""
+        """Drop every cached entry — point values, variance pairs,
+        grids and axis domains alike: the one path that keeps the
+        cache true to the tree."""
         self._eval_cache.clear()
+        self._eval_cells = 0
 
     def __getstate__(self) -> dict:
         # derived caches stay out of the pickle: its size must not
         # grow with the number of reads already answered
         state = dict(self.__dict__)
         for k in (
-            "_eval_cache", "_col_index_map", "_decoders", "cache_hits", "cache_misses"
+            "_eval_cache", "_eval_cells", "_col_index_map", "_decoders",
+            "cache_hits", "cache_misses",
         ):
             state.pop(k, None)
         return state
@@ -296,33 +384,7 @@ class SPNModel:
     def __setstate__(self, state: dict) -> None:
         self.__dict__.update(state)
         self._eval_cache = {}
-        self.cache_hits = self.cache_misses = 0
-
-    def _build_axes(
-        self, cond: dict, idxs: list[int], what: str
-    ) -> dict[int, np.ndarray]:
-        """Grid axes for the given column indexes: each axis enumerates
-        the column's distinct values restricted by (and CONSUMING) any
-        WHERE range on it in ``cond``; the combined cell count is
-        capped (GroupByExplosion). One definition for every grid
-        builder here — distinct counts, value masses, grouped aqp,
-        grouped CIs used to hand-copy this block."""
-        axes: dict[int, np.ndarray] = {}
-        for i in idxs:
-            dom = distinct_values(self.root, i)
-            rng = cond.pop(i, None)
-            if rng is not None:
-                dom = np.array([v for v in dom if value_admitted(rng, v)])
-            axes[i] = dom
-        # arbitrary-precision product: an int64 np.prod wraps silently
-        # past 9.2e18 and would bypass the cap on absurd grids
-        n_cells = _math.prod(len(a) for a in axes.values())
-        if n_cells > MAX_GROUPBY_CELLS:
-            raise GroupByExplosion(
-                f"{what} grid has {n_cells} cells "
-                f"(> {MAX_GROUPBY_CELLS}); use the exact plane"
-            )
-        return axes
+        self._eval_cells = self.cache_hits = self.cache_misses = 0
 
     def _decoder(self, col: str):
         """code -> original value of ``col``: a categorical column's
@@ -740,9 +802,6 @@ class SPNModel:
         return nom / den if den > 0 else 0.0
 
     # -- answering -----------------------------------------------------
-    def probability(self, cond: dict[int, Range]) -> float:
-        return evaluate(self.root, cond)
-
     def cardinality(self, query: Query) -> float:
         cond = self.conditions_to_ranges(query)
         extra, features = self.correction_factors(query)
@@ -833,10 +892,7 @@ class SPNModel:
             # to the query's sub-scope, not the replicated join
             extra, features = self.correction_factors(query)
             cond.update(extra)
-        axes = self._build_axes(cond, idx, "distinct")
-        if any(len(a) == 0 for a in axes.values()):
-            return 0.0
-        grid = evaluate_groupby(self.root, cond, features, axes)
+        _axes, grid = self._eval(cond, features, axes=idx)
         # expected-rows threshold (matches aqp's count>=0.5 group
         # pruning): a strict p>0 would count 1e-300 Sum-node residues
         # and every independence-product cross combination
@@ -859,12 +915,8 @@ class SPNModel:
             cond = dict(self.conditions_to_ranges(query))
             extra, features = self.correction_factors(query)
             cond.update(extra)
-        axes = self._build_axes(cond, [i], "value-mass")
-        dom = axes[i]
-        if len(dom) == 0:
-            return dom, np.array([])
-        masses = evaluate_groupby(self.root, cond, features, axes)
-        return dom, np.asarray(masses, dtype=np.float64).reshape(-1)
+        axes, masses = self._eval(cond, features, axes=[i])
+        return axes[i], masses.reshape(-1)
 
     def _grouped_value_masses(
         self, gb_cols: list[str], col: str, query: Query | None = None
@@ -889,12 +941,9 @@ class SPNModel:
             extra, features = self.correction_factors(query)
             cond.update(extra)
         axis_cols = list(gb_idx) + ([ci] if ci not in gb_idx else [])
-        axes = self._build_axes(cond, axis_cols, "grouped distinct")
-        if any(len(a) == 0 for a in axes.values()):
+        axes, grid = self._eval(cond, features, axes=axis_cols)
+        if grid.size == 0:
             return {}, self.full_join_size
-        grid = np.asarray(
-            evaluate_groupby(self.root, cond, features, axes), dtype=np.float64
-        )
         gb_dec = [self._decoder(c) for c in gb_cols]
         out: dict[tuple, dict] = {}
         if ci in gb_idx:
@@ -968,23 +1017,18 @@ class SPNModel:
 
         # group-by (reference B9 + B8): the model-side distinct combos
         # form a grid; evaluate_groupby computes EVERY combination in
-        # one tree pass per aggregate instead of one walk per combo
+        # one tree pass per aggregate instead of one walk per combo.
+        # Each axis enumerates the values a user WHERE range on its
+        # column admits (the grid singleton must intersect the range,
+        # never replace it)
         gb_cols = [c for _t, c in query.group_bys]
         gb_idx = [self._col_index(c) for c in gb_cols]
 
-        # restrict each domain by a user WHERE range on that column
-        # (the grid singleton must intersect it, never replace it),
-        # then drop the range — the axis enumerates admitted values
-        cond_rest = dict(base_cond)
-        axes = self._build_axes(cond_rest, gb_idx, "group-by")
-        n_cells = _math.prod(len(a) for a in axes.values())
+        def grid(feats, cond=base_cond, cols=gb_idx) -> np.ndarray:
+            return self.full_join_size * self._eval(cond, feats, axes=cols)[1]
 
-        def grid(feats, cond=None) -> np.ndarray:
-            return self.full_join_size * evaluate_groupby(
-                self.root, cond if cond is not None else cond_rest, feats, axes
-            )
-
-        count_grid = grid(features)
+        axes, expectations = self._eval(base_cond, features, axes=gb_idx)
+        count_grid = self.full_join_size * expectations
 
         def agg_grid(op) -> np.ndarray:
             feats = dict(features)
@@ -996,25 +1040,8 @@ class SPNModel:
                 ci = self._col_index(op.operands[0][1])
                 if ci in axes:
                     return (count_grid > 0).astype(np.float64)
-                cond2 = dict(cond_rest)
-                dom = self._build_axes(cond2, [ci], "grouped distinct")[ci]
-                if len(dom) == 0:
-                    return np.zeros_like(count_grid)
-                # the extended grid multiplies the group grid by the
-                # distinct domain — re-check the cell cap (the group
-                # grid alone passing it is not enough)
-                ext_cells = n_cells * len(dom)
-                if ext_cells > MAX_GROUPBY_CELLS:
-                    raise GroupByExplosion(
-                        f"grouped COUNT(DISTINCT) grid has {ext_cells} "
-                        f"cells (> {MAX_GROUPBY_CELLS}); use the exact "
-                        "plane"
-                    )
-                axes2 = dict(axes)
-                axes2[ci] = dom
-                g2 = evaluate_groupby(self.root, cond2, features, axes2)
                 return (
-                    (self.full_join_size * g2 >= 0.5)
+                    (grid(features, cols=gb_idx + [ci]) >= 0.5)
                     .sum(axis=-1)
                     .astype(np.float64)
                 )
@@ -1027,14 +1054,14 @@ class SPNModel:
             if op.agg_type is AggregationType.COUNT:
                 if not op.operands:
                     return count_grid
-                return grid(feats, self._notnull_cond(cond_rest, ops_off_axis))
+                return grid(feats, self._notnull_cond(base_cond, ops_off_axis))
             for _t, c in op.operands:
                 feats[self._col_index(c)] = _identity
             val = grid(feats)
             if op.agg_type is AggregationType.SUM:
                 return val
             den = (
-                grid(features, self._notnull_cond(cond_rest, ops_off_axis))
+                grid(features, self._notnull_cond(base_cond, ops_off_axis))
                 if ops_off_axis
                 else count_grid
             )
@@ -1069,6 +1096,7 @@ class SPNModel:
         reference). GROUP BY queries return one row per (group,
         aggregate) with the group columns attached (reference:
         confidence_interval_evaluation over grouped AQP queries)."""
+        _refuse_composite_ci(query)
         z = z_value(confidence)
         cond = self.conditions_to_ranges(query)
         extra, features = self.correction_factors(query)
@@ -1083,10 +1111,8 @@ class SPNModel:
             # cap as the batch path
             gb_cols = [c for _t, c in query.group_bys]
             gb_idx = [self._col_index(c) for c in gb_cols]
-            axes = self._build_axes(cond, gb_idx, "group-by CI")
-            count_grid = self.full_join_size * evaluate_groupby(
-                self.root, cond, features, axes
-            )
+            axes, grid = self._eval(cond, features, axes=gb_idx)
+            count_grid = self.full_join_size * grid
             decoders = [self._decoder(c) for c in gb_cols]
             out: list[dict] = []
             for idx in np.argwhere(count_grid >= 0.5):
@@ -1128,15 +1154,6 @@ class SPNModel:
         p, var_p = self._eval(cond, features, moments=True)
         out = []
         for op in query.aggregations:
-            if op.op_type is not AggregationOperationType.AGGREGATION:
-                # composite chains (SUM(x) - SUM(y)) need covariance
-                # between steps over the SAME rows — silently emitting
-                # per-step CIs whose ests disagree with aqp() was a
-                # trap; raise like the other unsupported CI shapes
-                raise ModelPlaneUnsupported(
-                    "confidence intervals for composite aggregates "
-                    "(agg ± agg) are not supported; use the exact plane"
-                )
             if getattr(op, "distinct", False):
                 raise ModelPlaneUnsupported(
                     "confidence intervals for COUNT(DISTINCT) are not "

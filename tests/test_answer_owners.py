@@ -6,7 +6,10 @@ owner (README "Model-plane answer algebra").
 - inclusion-exclusion terms are expanded only by the signed-term sum
   (SPNEnsemble._signed_sum) and by _ie_terms' own recursion;
 - a dictionary's value_to_code map is inverted only by the decoder
-  (SPNModel._decoder).
+  (SPNModel._decoder);
+- spn/model.py walks the tree (point, variance and grid passes, axis
+  domains) only from the factor-cache owner (SPNModel._eval), so every
+  walk is served from, and bounded by, the one cache.
 """
 
 from __future__ import annotations
@@ -76,6 +79,17 @@ def _inverts_dictionary(node: ast.AST) -> bool:
     )
 
 
+_WALKS = {"evaluate", "evaluate_groupby", "evaluate_with_variance", "distinct_values"}
+
+
+def _walks_the_tree(node: ast.AST) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    return name in _WALKS
+
+
 def test_aggregate_fold_is_the_only_reader_of_plus():
     spn = [p for p in PACKAGE if p.parent.name == "spn"]
     assert _owners(spn, _is_plus) == {
@@ -93,4 +107,11 @@ def test_signed_sum_is_the_only_expander_of_ie_terms():
 def test_decoder_is_the_only_inverse_dictionary():
     assert _owners(PACKAGE + [REPO / "__spark_entry__.py"], _inverts_dictionary) == {
         ("deepdb_public_spark/spn/model.py", "_decoder")
+    }
+
+
+def test_factor_cache_owner_is_the_only_tree_walker_in_the_model():
+    model = REPO / "deepdb_public_spark" / "spn" / "model.py"
+    assert _owners([model], _walks_the_tree) == {
+        ("deepdb_public_spark/spn/model.py", "_eval")
     }

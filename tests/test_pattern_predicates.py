@@ -412,3 +412,26 @@ def test_composite_aggregate_ci_raises(engines):
     )
     with pytest.raises(ModelPlaneUnsupported):
         eng.ensemble.confidence_interval(q, confidence=0.95)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # cross-column OR: the inclusion-exclusion CI path
+        "SELECT COUNT(*) - SUM(lineitem.l_quantity) AS q FROM lineitem "
+        "WHERE (lineitem.l_quantity < 10 OR lineitem.l_discount > 0.08)",
+        # orders⋈lineitem, which neither model covers: the factor chain
+        "SELECT COUNT(*) AS c, SUM(lineitem.l_quantity) + COUNT(*) AS q "
+        "FROM orders, lineitem WHERE orders.o_orderkey = lineitem.l_orderkey "
+        "AND orders.o_orderstatus = 'F' GROUP BY lineitem.l_returnflag",
+    ],
+)
+def test_composite_aggregate_ci_raises_on_the_composed_paths(engines, sql):
+    """The inclusion-exclusion and factor-chain CI paths refuse agg ±
+    agg too: they used to report the chain's first aggregate's interval
+    under the chain's name."""
+    from deepdb_public_spark.spn.model import ModelPlaneUnsupported
+
+    eng = engines
+    with pytest.raises(ModelPlaneUnsupported, match="composite"):
+        eng.ensemble.confidence_interval(eng.parse(sql), confidence=0.95)

@@ -153,6 +153,46 @@ def test_evaluate_aqp_skips_exploding_groupby(engine, col3_model, monkeypatch):
     assert out["n_cells"] == 1  # the ungrouped query still evaluated
 
 
+_AQP_ROW_ORDER = """
+import sys
+from types import SimpleNamespace
+from deepdb_public_spark.evaluation import evaluate_aqp
+
+keys = [f"g{i:02d}" for i in range(24)]
+engine = SimpleNamespace(
+    parse=lambda sql: SimpleNamespace(group_bys=[("t", "g")]),
+    ensemble=SimpleNamespace(
+        aqp=lambda q: [{"g": k, "n": float(i)} for i, k in enumerate(keys[:-2])]
+    ),
+)
+truth = {"q": [{"g": k, "n": i + 1} for i, k in enumerate(keys[2:])]}
+evaluate_aqp(engine, ["q"], output_csv=sys.argv[1], ground_truth=truth)
+"""
+
+
+def test_evaluate_aqp_row_order_is_independent_of_the_string_hash(tmp_path):
+    """Grouped rows come out in one order whatever PYTHONHASHSEED is,
+    so two runs of the same code write the same CSV."""
+    import csv
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    orders = []
+    for seed in ("1", "2"):
+        out = tmp_path / f"aqp_{seed}.csv"
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        subprocess.run(
+            [sys.executable, "-c", _AQP_ROW_ORDER, str(out)],
+            cwd=root, env=env, check=True,
+        )
+        with open(out) as f:
+            orders.append([r[1:3] for r in csv.reader(f) if not r[0].startswith("#")])
+    assert len(orders[0]) == 1 + 2 + 20 + 2  # header, model-only, both, exact-only
+    assert orders[0] == orders[1]
+
+
 def test_stateful_streaming_matches_batch(spark):
     stream = stream_events(spark, f"{SF_CORRECT}/events.parquet", watermark="2 days")
     out = run_stateful_stream(stream, "t_user_stats").toPandas()
