@@ -2367,7 +2367,7 @@ def _m_factorized_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts compose across models — the anchor's per-value (or
     per-(group, value)) mass grid scaled by the factor chain's
     NOT-NULL total, thresholded at 0.5 expected rows
-    (SPNEnsemble._chain_value_masses / _chain_grouped_value_masses;
+    (SPNEnsemble._cell_masses;
     reference: spn_ensemble.py::evaluate_factors +
     group_by_combination.py — the reference itself has neither
     factorized distinct nor the OR grammar). Cases: ungrouped,

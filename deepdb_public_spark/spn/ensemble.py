@@ -72,6 +72,27 @@ def _with_conditions(query: Query, extra: list) -> Query:
     )
 
 
+def _pin(query: Query, key: tuple, group_bys=None) -> Query:
+    """``query`` (its tables, joins, conditions and aggregates) for ONE
+    group, ungrouped: each GROUP BY column, or each of ``group_bys``,
+    pinned to its value in ``key`` as ``t.c = v``."""
+    pairs = query.group_bys if group_bys is None else group_bys
+    return Query(
+        query_type=query.query_type,
+        table_set=set(query.table_set),
+        relationship_set=set(query.relationship_set),
+        conditions=list(query.conditions)
+        + [Condition(t, c, "=", v) for (t, c), v in zip(pairs, key)],
+        aggregations=list(query.aggregations),
+    )
+
+
+def _not_null(*refs) -> list[Condition]:
+    """``t.c IS NOT NULL`` for every (table, column) of every list in
+    ``refs``: the rows a grid axis or an aggregate operand counts."""
+    return [Condition(t, c, "IS_NOT_NULL") for rs in refs for t, c in rs or ()]
+
+
 def _single_aggregate(
     base: Query, agg_type, operands, group_bys=(), extra=()
 ) -> Query:
@@ -299,8 +320,7 @@ class SPNEnsemble:
     def _chain_count(self, query: Query, extra: list | None = None) -> float:
         """Factorized cardinality of the FULL query with optional extra
         conditions — the scaling chain every grouped/per-value
-        factorized estimate divides through (one definition; four call
-        sites used to copy it)."""
+        factorized estimate divides through."""
         return float(self.cardinality(_with_conditions(query, extra or [])))
 
     def _grouped_anchor(self, query: Query, need: set, component):
@@ -308,9 +328,7 @@ class SPNEnsemble:
         ONE connected piece of the query's join graph, ranked by
         condition-table coverage, then piece size, then earliest
         registration. None when no model qualifies (callers fall back
-        or raise their own ModelPlaneUnsupported). Shared by every
-        grouped factorized path — the round-7 NULL-pinning fix had to
-        be applied to multiple hand-copied versions of this loop."""
+        or raise their own ModelPlaneUnsupported)."""
         if not need:
             return None
         cond_tables = {c.table for c in query.conditions}
@@ -324,8 +342,8 @@ class SPNEnsemble:
                 continue
             cands.append((len(piece & cond_tables), len(piece), -mi, m, piece))
         if not cands:
-            # round 9: train a budgeted model over exactly `need` on
-            # demand (when enabled) instead of returning the refusal
+            # train a budgeted model over exactly `need` on demand
+            # (when enabled) instead of returning the refusal
             m = self._train_on_demand(need)
             if m is not None:
                 avail = m.table_set & set(query.table_set)
@@ -448,7 +466,7 @@ class SPNEnsemble:
         merge_indicator_exp). Cancellation is exact when the term is
         nonzero (identical expressions evaluate identically, so the
         product is unchanged) and strictly better when it is zero:
-        the chain anchor reappearing in a later denominator used to
+        the chain anchor reappearing in a later denominator would
         turn the whole product into 0 * (0/0-guard) = 0, while the
         cancelled form keeps the meaningful remainder. It also skips
         the cancelled evaluations entirely. Returns the steps with only
@@ -475,20 +493,14 @@ class SPNEnsemble:
                 rel_var,
             )
 
-        def wexp_term(m: SPNModel, subq: Query, rel, with_conds: bool):
+        def wexp_term(m: SPNModel, subq: Query, rel):
             def rel_var() -> float:
-                p, v = m._weighted_expectation_moments(subq, rel, with_conds)
+                p, v = m._weighted_expectation_moments(subq, rel)
                 return v / (p * p) if p > 0 else 0.0
 
             return (
-                (
-                    "wexp",
-                    mi_of[id(m)],
-                    self._subq_key(subq),
-                    rel.identifier,
-                    with_conds,
-                ),
-                lambda: m._weighted_expectation(subq, rel, with_conds),
+                ("wexp", mi_of[id(m)], self._subq_key(subq), rel.identifier),
+                lambda: m._weighted_expectation(subq, rel),
                 rel_var,
             )
 
@@ -558,7 +570,7 @@ class SPNEnsemble:
                     )
                 )
             if not cands:
-                # round 9: same closure as the grouped plane — train a
+                # same closure as the grouped plane — train a
                 # budgeted single-table model over the missing frontier
                 # table on demand (when enabled) instead of refusing;
                 # its boundary multiplier column makes it `usable` for
@@ -594,13 +606,10 @@ class SPNEnsemble:
                 if usable:
                     # fanout-weighted P(conds over D | parent
                     # referenced [, overlap conds])
-                    noms.append(wexp_term(m, sub_query(D | overlap), edge, True))
+                    noms.append(wexp_term(m, sub_query(D | overlap), edge))
                     dens.append(
                         wexp_term(
-                            m,
-                            sub_query({new_t} | overlap, cond_tables=overlap),
-                            edge,
-                            True,
+                            m, sub_query({new_t} | overlap, cond_tables=overlap), edge
                         )
                     )
                 else:  # no multiplier column: unweighted fraction
@@ -634,7 +643,7 @@ class SPNEnsemble:
                         # piece == the anchor piece (merge_indicator_exp
                         # chain case).
                         pq = sub_query(set(piece))
-                        noms.append(wexp_term(mp, pq, edge, True))
+                        noms.append(wexp_term(mp, pq, edge))
                         noms.append(card_term(m, sub_query(D)))
                         dens.append(card_term(mp, pq))
                         dens.append(
@@ -967,7 +976,7 @@ class SPNEnsemble:
         The anchor is the model covering x's table whose piece spans
         the most condition-bearing tables.
 
-        GROUPED queries (round 6): when one anchor piece covers every
+        GROUPED queries: when one anchor piece covers every
         group-by table AND aggregate operand, the anchor's per-group
         grid supplies the group PROPORTIONS and the factor chain the
         TOTAL — per-group estimate = anchor-group value × (chain total
@@ -980,18 +989,18 @@ class SPNEnsemble:
         COUNTs ride the full factor chain with the group value pinned
         as an equality condition, and the operand mean comes from the
         operand anchor's local AVG.
-        COUNT(DISTINCT) (round 7) thresholds the factorized per-value
-        masses (_chain_value_masses): anchor per-value grid scaled by
-        the factor chain's NOT-NULL total."""
+        COUNT(DISTINCT) thresholds the factorized per-value masses
+        (_cell_masses): anchor per-value grid scaled by the factor
+        chain's NOT-NULL total."""
         if query.group_bys:
             return self._aqp_factorized_grouped(query)
 
         def value_of(op) -> float:
             if op.distinct:
                 # COUNT(DISTINCT) over a multi-model table set: the
-                # factorized per-value masses, thresholded (round 7)
-                return self._distinct_counts(query, op.operands[0])[()]
-            nn = [Condition(t, c, "IS_NOT_NULL") for t, c in (op.operands or [])]
+                # factorized per-value masses, thresholded
+                return self._distinct_counts(query, op.operands[:1])[()]
+            nn = _not_null(op.operands)
             if op.agg_type is AggregationType.COUNT:
                 return self._chain_count(query, nn)
             # AVG of the operand product from the best local model
@@ -1054,7 +1063,7 @@ class SPNEnsemble:
                     for k in visible
                 }
             if op.distinct:
-                val = self._distinct_counts(query, op.operands[0], gb_cols)
+                val = self._distinct_counts(query, op.operands[:1], query.group_bys)
                 if visible is None:
                     visible = set(val)
                 return val
@@ -1072,10 +1081,11 @@ class SPNEnsemble:
         )
 
     def _signed_masses(
-        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+        self, query: Query, values: list, group_bys=()
     ) -> dict[tuple, dict]:
-        """{visible group key: {decoded value: signed expected rows with
-        col = v}}; ungrouped, the one key (). Inclusion-exclusion
+        """{visible group key: {decoded value cell: signed expected rows}}
+        over the (table, column) refs ``values`` per group of
+        ``group_bys``; ungrouped, the one key (). Inclusion-exclusion
         applies to the per-value MASSES (P(gb=g AND col=v AND ·) is
         linear in the row indicator), so the expected-rows threshold is
         taken on the COMBINED mass. Signing thresholded per-term COUNTS
@@ -1087,19 +1097,21 @@ class SPNEnsemble:
         different models must not mix probability masses over
         different denominators or per-model dictionary codes. Terms
         over table sets no single model covers ride the factorized
-        masses (round 7). Visible groups follow the aqp rule: a group
-        appears iff some POSITIVE term gives it expected rows >= 0.5."""
-        if not gb_cols:
-            total, _ = self._signed_sum(
-                query, lambda q: self._chain_value_masses(q, col_ref)
-            )
-            return {(): total}
+        masses (_cell_masses). Visible groups follow the aqp rule: a
+        group appears iff some POSITIVE term gives it expected rows >=
+        0.5."""
+        g = len(group_bys)
+
+        def per_term(q: Query) -> dict[tuple, dict]:
+            out: dict[tuple, dict] = {}
+            for cell, rows in self._cell_masses(q, values, group_bys).items():
+                out.setdefault(cell[:g], {})[cell[g:]] = rows
+            return out
+
         total, visible = self._signed_sum(
-            query,
-            lambda q: self._chain_grouped_value_masses(q, gb_cols, col_ref),
-            positive=lambda vm: sum(vm.values()) >= 0.5,
+            query, per_term, positive=lambda vm: sum(vm.values()) >= 0.5
         )
-        return {key: total.get(key, {}) for key in visible}
+        return {key: total.get(key, {}) for key in (visible if g else [()])}
 
     @staticmethod
     def _threshold_count(masses) -> float:
@@ -1108,21 +1120,21 @@ class SPNEnsemble:
         return float(sum(1 for rows in masses if rows >= 0.5))
 
     def _distinct_counts(
-        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+        self, query: Query, values: list, group_bys=()
     ) -> dict[tuple, float]:
-        """{visible group key: COUNT(DISTINCT col)} (key () when
+        """{visible group key: COUNT(DISTINCT values)} (key () when
         ungrouped) for any query the model plane answers: the signed
-        masses of _signed_masses, thresholded per value."""
+        masses of _signed_masses, thresholded per value cell."""
         return {
             key: self._threshold_count(vm.values())
-            for key, vm in self._signed_masses(query, col_ref, gb_cols).items()
+            for key, vm in self._signed_masses(query, values, group_bys).items()
         }
 
     def _occupancy_moments(
-        self, query: Query, col_ref: tuple[str, str], gb_cols=()
+        self, query: Query, values: list, group_bys=()
     ) -> dict[tuple, list[float]]:
-        """{visible group key: [est, var]} for COUNT(DISTINCT col) (round
-        8 — previously a ModelPlaneUnsupported refusal). The point
+        """{visible group key: [est, var]} for COUNT(DISTINCT values).
+        The point
         estimate is the SAME 0.5-threshold count aqp emits
         (_distinct_counts), so CI and aqp answers agree. The
         variance treats each value's presence as an independent
@@ -1146,7 +1158,7 @@ class SPNEnsemble:
         surface.)"""
         return {
             key: self._occupancy_moments_from_masses(vm.values())
-            for key, vm in self._signed_masses(query, col_ref, gb_cols).items()
+            for key, vm in self._signed_masses(query, values, group_bys).items()
         }
 
     @staticmethod
@@ -1165,36 +1177,55 @@ class SPNEnsemble:
         var += (est - mean) ** 2
         return [est, var]
 
-    def _chain_value_masses(
-        self, query: Query, col_ref: tuple[str, str]
-    ) -> dict:
-        """{decoded value: expected FULL-query rows with col = v} for
-        one conjunctive (OR-free) query. A covering model answers from
-        its per-value grid directly (B8/B9). Table sets no single
-        model covers extend the factorized COUNT (B11): the anchor
-        covering the column's table supplies per-value masses in its
-        piece, scaled by chain_count(col IS NOT NULL) / anchor NOT-NULL
-        total — i.e. remote predicates are assumed value-independent,
-        the per-value form of the independence the factorized COUNT
-        already assumes for remote selectivities (reference:
-        spn_ensemble.py::evaluate_factors; budget-tested, not exact)."""
-        t, c = col_ref
+    def _cell_masses(
+        self, query: Query, values: list, group_bys=()
+    ) -> dict[tuple, float]:
+        """{decoded cell over the axes ``group_bys`` + ``values``
+        ((table, column) refs): expected FULL-query rows} for one
+        conjunctive (OR-free) query — the one owner of factorized mass
+        grids. A covering model reads its own grid (B8/B9). Table sets
+        no single model covers extend the factorized COUNT (B11): the
+        anchor covering every axis table in one connected piece
+        supplies the grid, scaled by the factor chain's count with
+        every axis NOT NULL over the anchor's total (grids exclude
+        NULLs on every axis, so both measure the same rows) — i.e.
+        remote predicates are assumed group- and value-independent, the
+        per-cell form of the independence the factorized COUNT already
+        assumes for remote selectivities (reference: spn_ensemble.py::
+        evaluate_factors; budget-tested, not exact). With no such
+        anchor a grouped request (``group_bys`` is the query's GROUP
+        BY) pins each cross-piece group key and reads the pinned
+        query's ungrouped masses; an ungrouped one raises
+        ModelPlaneUnsupported."""
+        axes = list(group_bys) + list(values)
+        cols = [c for _t, c in axes]
         try:
             model = self.select_model(query)
         except ValueError:
             model = None
         if model is not None:
-            dom, masses = model._value_masses(c, query)
-            fjs = model.full_join_size
-            return dict(zip(map(model._decoder(c), dom), (fjs * masses).tolist()))
-        m, local = self._anchor_local(query, [col_ref])
-        dom, masses = m._value_masses(c, local)
-        fjs = m.full_join_size
-        anchor_nn = fjs * float(masses.sum())
-        if anchor_nn <= 0 or len(dom) == 0:
+            return model._grouped_value_masses(cols, query)
+        _q_rels, component, sub_query = self._query_graph(query)
+        tables = {t for t, _c in axes}
+        anchor = self._grouped_anchor(query, tables, component)
+        if anchor is None:
+            if not group_bys:
+                raise ModelPlaneUnsupported(
+                    f"no model covers {sorted(tables)} in one connected "
+                    "piece: use the exact plane"
+                )
+            return {
+                key + cell: rows
+                for key in self._cross_piece_group_keys(query, component, sub_query)
+                for cell, rows in self._cell_masses(_pin(query, key), values).items()
+            }
+        m, piece = anchor
+        cells = m._grouped_value_masses(cols, sub_query(set(piece)))
+        tot = sum(cells.values())
+        if tot <= 0:
             return {}
-        sc = self._chain_count(query, [Condition(t, c, "IS_NOT_NULL")]) / anchor_nn
-        return dict(zip(map(m._decoder(c), dom), (fjs * masses * sc).tolist()))
+        sc = self._chain_count(query, _not_null(axes)) / tot
+        return {cell: rows * sc for cell, rows in cells.items()}
 
     def _col_ref(self, col: str, query: Query) -> tuple[str, str]:
         """(owning table, column) for a bare column name, resolved
@@ -1250,12 +1281,12 @@ class SPNEnsemble:
         def weight_edge():
             """The anchor piece's single frontier FK edge whose PARENT
             end lies inside the piece and whose multiplier column the
-            anchor model carries (round 9): when the query expands
+            anchor model carries: when the query expands
             from the piece DOWN such an edge, the query's row measure
             replicates each piece row by its child fanout — so group
             PROPORTIONS must be taken fanout-weighted or a
             group↔fanout correlation is silently dropped (the
-            round-9 unit fixture: 'A' parents have 4× the children,
+            unit fixture: 'A' parents have 4× the children,
             the unweighted grid splits 0.4/0.6 instead of the true
             0.73/0.27). Child-side frontier edges keep measure (each
             piece row joins upward exactly once) and need no weight.
@@ -1280,29 +1311,22 @@ class SPNEnsemble:
             g = grid(AggregationType.COUNT, operands)
             wrel = weight_edge()
             if wrel is not None and g:
-                lq = sub_query(set(piece))
-                base_conditions = list(lq.conditions) + [
-                    Condition(t, c, "IS_NOT_NULL") for t, c in operands
-                ]
-                gw: dict[tuple, float] = {}
-                for k in g:
-                    lq.conditions = base_conditions + [
-                        Condition(gt, gc, "=", v)
-                        for (gt, gc), v in zip(query.group_bys, k)
-                    ]
-                    gw[k] = float(m._weighted_expectation(lq, wrel, True))
+                lq = _with_conditions(sub_query(set(piece)), _not_null(operands))
+                gw = {
+                    k: float(
+                        m._weighted_expectation(_pin(lq, k, query.group_bys), wrel)
+                    )
+                    for k in g
+                }
                 if sum(gw.values()) > 0:
                     g = gw
             tot = sum(g.values())
             if tot <= 0:
                 return {k: 0.0 for k in g}
             # the anchor grid's group axes exclude NULLs, so the chain
-            # total must too (round 7: without the group-column NOT
-            # NULL pins, null-group row mass inflated every group)
-            extra = [Condition(t, c, "IS_NOT_NULL") for t, c in operands] + [
-                Condition(gt, gc, "IS_NOT_NULL") for gt, gc in query.group_bys
-            ]
-            sc = self._chain_count(query, extra) / tot
+            # total must too (without the group-column NOT NULL pins,
+            # null-group row mass inflates every group)
+            sc = self._chain_count(query, _not_null(operands, query.group_bys)) / tot
             return {k: v * sc for k, v in g.items()}
 
         def value_of(op) -> dict[tuple, float]:
@@ -1312,7 +1336,7 @@ class SPNEnsemble:
                 # value) masses scaled by the factor chain (the same
                 # group-independent remote factor scaled_count assumes),
                 # then the 0.5-expected-rows threshold per cell
-                return self._distinct_counts(query, op.operands[0], gb_cols)
+                return self._distinct_counts(query, op.operands[:1], query.group_bys)
             if op.agg_type is AggregationType.COUNT:
                 return scaled_count(ops)
             if op.agg_type is AggregationType.AVG:
@@ -1372,25 +1396,19 @@ class SPNEnsemble:
             keys = [tuple(r[c] for c in gb_cols) for r in mg.aqp(lq)]
         else:
             # group-by tables themselves span models with no single
-            # covering anchor (round 8): enumerate each piece's key
+            # covering anchor: enumerate each piece's key
             # grid from its own anchor and cross-product; the pinned
             # chain COUNT below recovers cross-piece correlations and
             # the 0.5-expected-rows threshold prunes impossible combos
             keys = self._cross_piece_group_keys(query, component, sub_query)
-
-        def pin(key: tuple) -> list:
-            return [
-                Condition(t, c, "=", v)
-                for (t, c), v in zip(query.group_bys, key)
-            ]
 
         # cached for this answer only: COUNT(*) is the visibility
         # count, and SUM shares its AVG grid and pinned NOT-NULL count
         # with AVG and COUNT over the same operands
         @functools.cache
         def pinned_count(operands: tuple) -> dict:
-            nn = [Condition(t, c, "IS_NOT_NULL") for t, c in operands]
-            return {k: self._chain_count(query, pin(k) + nn) for k in keys}
+            nn = _not_null(operands)
+            return {k: self._chain_count(_pin(query, k), nn) for k in keys}
 
         @functools.cache
         def avg_grid(operands: tuple) -> dict:
@@ -1412,24 +1430,19 @@ class SPNEnsemble:
             a0 = float(row["v"])
             if not in_piece:
                 return {k: a0 for k in keys}
-            base_conditions = list(local.conditions)
+            pinned = [query.group_bys[i] for i in in_piece]
             out: dict[tuple, float] = {}
             cache: dict[tuple, float] = {}
             for k in keys:
                 pk = tuple(k[i] for i in in_piece)
                 if pk not in cache:
-                    local.conditions = base_conditions + [
-                        Condition(*query.group_bys[i], "=", k[i])
-                        for i in in_piece
-                    ]
                     try:
-                        (r,) = m.aqp(local)
+                        (r,) = m.aqp(_pin(local, pk, pinned))
                         a = float(r["v"])
                     except (ValueError, ZeroDivisionError):
                         a = a0
                     cache[pk] = a if math.isfinite(a) else a0
                 out[k] = cache[pk]
-            local.conditions = base_conditions
             return out
 
         visible = [k for k, n in pinned_count(()).items() if n >= 0.5]
@@ -1441,11 +1454,9 @@ class SPNEnsemble:
                 # group-by columns: pin each group key as an equality
                 # condition (the split pattern the per-group COUNTs
                 # already use) and threshold the factorized per-value
-                # masses of the pinned chain (round 7)
+                # masses of the pinned chain
                 return {
-                    k: self._distinct_counts(
-                        _with_conditions(query, pin(k)), op.operands[0]
-                    )[()]
+                    k: self._distinct_counts(_pin(query, k), op.operands[:1])[()]
                     for k in keys
                 }
             if op.agg_type is AggregationType.COUNT:
@@ -1592,8 +1603,9 @@ class SPNEnsemble:
         method over the product — relative variances of the anchor's
         AVG (its B10 CI sd) and the factor chain's COUNT add. Shares
         the independence assumption _aqp_factorized documents."""
-        nn = [Condition(t, c, "IS_NOT_NULL") for t, c in operands]
-        cnt, sd_c = self._factorized_count_moments(_with_conditions(query, nn))
+        cnt, sd_c = self._factorized_count_moments(
+            _with_conditions(query, _not_null(operands))
+        )
         m, local = self._anchor_local(query, operands)
         (row,) = m.confidence_interval(local, confidence=0.95)
         avg, sd_a = float(row["est"]), float(row.get("sd", 0.0))
@@ -1618,7 +1630,7 @@ class SPNEnsemble:
         anchor's own >=0.5-expected-rows pruning.
 
         When NO model covers the group-by tables + operands in one
-        piece (round 8), each cross-piece group key is pinned as
+        piece, each cross-piece group key is pinned as
         equality conditions on the query and the UNGROUPED factorized
         moments of the pinned query answer per key — pins whose table
         lies in the operand anchor's piece flow into its local AVG
@@ -1634,10 +1646,7 @@ class SPNEnsemble:
             keys = self._cross_piece_group_keys(query, component, sub_query)
             out: dict[tuple, tuple[float, float]] = {}
             for k in keys:
-                qk = _with_conditions(
-                    query,
-                    [Condition(t, c, "=", v) for (t, c), v in zip(query.group_bys, k)],
-                )
+                qk = _pin(query, k)
                 cnt, sd_c = self._factorized_count_moments(qk)
                 if cnt < 0.5:
                     continue  # same visibility rule as the grouped grids
@@ -1665,11 +1674,10 @@ class SPNEnsemble:
             # so only the COUNT branch gates on this quantity.
             return {}
         # group axes exclude NULLs in the anchor's grouped rows, so
-        # the chain must pin them NOT NULL too (round 7)
-        nn = [Condition(t, c, "IS_NOT_NULL") for t, c in (operands or [])] + [
-            Condition(gt, gc, "IS_NOT_NULL") for gt, gc in query.group_bys
-        ]
-        chain, sd_chain = self._factorized_count_moments(_with_conditions(query, nn))
+        # the chain must pin them NOT NULL too
+        chain, sd_chain = self._factorized_count_moments(
+            _with_conditions(query, _not_null(operands, query.group_bys))
+        )
         rel_chain = (sd_chain / chain) ** 2 if chain > 0 else 0.0
         if agg_type is AggregationType.COUNT:
             scale = chain / tot
@@ -1691,85 +1699,14 @@ class SPNEnsemble:
             out[key] = (est, abs(est) * math.sqrt(rel))
         return out
 
-    def _chain_grouped_value_masses(
-        self, query: Query, gb_cols: list[str], col_ref: tuple[str, str]
-    ) -> dict[tuple, dict]:
-        """{decoded group key: {decoded value: expected FULL-query
-        rows}} for one conjunctive query — the grouped analogue of
-        _chain_value_masses. A covering model reads its own grid;
-        otherwise the anchor covering the group-by tables AND the
-        column's table in one connected piece supplies the grid,
-        scaled by chain_count(col IS NOT NULL) over the anchor's total
-        (remote factors assumed group- and value-independent, as in
-        the factorized grouped COUNT). When no such anchor exists
-        (round 8 — group tables and/or the distinct column span
-        pieces), each cross-piece group key is pinned as equality
-        conditions and the pinned conjunctive query's UNGROUPED
-        per-value masses answer per key — the grouped analogue of the
-        split-anchor distinct m19 proves."""
-        t, c = col_ref
-        try:
-            model = self.select_model(query)
-        except ValueError:
-            model = None
-        if model is not None:
-            gm, fjs = model._grouped_value_masses(gb_cols, c, query)
-            return {
-                k: {v: fjs * mass for v, mass in vm.items()}
-                for k, vm in gm.items()
-            }
-        _q_rels, component, sub_query = self._query_graph(query)
-        need = {tt for tt, _cc in query.group_bys} | {t}
-        anchor = self._grouped_anchor(query, need, component)
-        if anchor is None:
-            keys = self._cross_piece_group_keys(query, component, sub_query)
-            return {
-                k: self._chain_value_masses(
-                    _with_conditions(
-                        query,
-                        [
-                            Condition(gt, gc, "=", v)
-                            for (gt, gc), v in zip(query.group_bys, k)
-                        ],
-                    ),
-                    col_ref,
-                )
-                for k in keys
-            }
-        m, piece = anchor
-        gm, fjs = m._grouped_value_masses(gb_cols, c, sub_query(set(piece)))
-        tot = fjs * sum(mass for vm in gm.values() for mass in vm.values())
-        if tot <= 0:
-            return {k: {} for k in gm}
-        # the grid's domains exclude NULLs on EVERY axis (group axes
-        # and the distinct column), so the chain must pin NOT NULL on
-        # all of them — else sc inflates by the null-group row mass
-        sc = (
-            self._chain_count(
-                query,
-                [Condition(t, c, "IS_NOT_NULL")]
-                + [
-                    Condition(gt, gc, "IS_NOT_NULL")
-                    for gt, gc in query.group_bys
-                ],
-            )
-            / tot
-        )
-        return {
-            k: {v: fjs * mass * sc for v, mass in vm.items()}
-            for k, vm in gm.items()
-        }
-
     def distinct_count(self, query: Query, cols: list[str]) -> float:
         """COUNT(DISTINCT cols) estimate from the covering model (B9
         exposed — see SPNModel.distinct_count). ``query`` carries the
         table scope and optional conditions. Cross-column OR groups
         combine per-VALUE masses by signed sums; multi-column requests
-        sign the full cross grid cell-wise (round 6: the grouped
-        machinery reused with the leading columns as grid axes) and
-        threshold each cell's COMBINED expected rows. Table sets no
-        single model covers threshold the factorized per-value /
-        per-cell masses (round 7)."""
+        sign the full cross grid cell-wise and threshold each cell's
+        COMBINED expected rows. Table sets no single model covers
+        threshold the factorized per-cell masses (_cell_masses)."""
         if self._complex_or_index(query) is None:
             try:
                 model = self.select_model(query)
@@ -1777,50 +1714,8 @@ class SPNEnsemble:
                 model = None
             if model is not None:
                 return model.distinct_count(cols, query)
-        if len(cols) == 1:
-            return self._distinct_counts(query, self._col_ref(cols[0], query))[()]
-        # multi-column: per-term (leading-cols x last-col) mass grids,
-        # signed in expected-row units per cell, then the
-        # 0.5-expected-rows threshold on the combined cell mass — same
-        # set-algebra argument as the grouped case
-        cells, _ = self._signed_sum(query, lambda q: self._chain_cell_masses(q, cols))
-        return self._threshold_count(cells.values())
-
-    def _chain_cell_masses(
-        self, query: Query, cols: list[str]
-    ) -> dict[tuple, float]:
-        """{decoded (col1, …, colN) cell: expected FULL-query rows} for
-        one conjunctive query — the multi-column analogue of
-        _chain_value_masses. A covering model reads its own
-        (leading-cols x last-col) grid; otherwise the anchor covering
-        every operand table supplies the grid, scaled by the factor
-        chain's all-operands-NOT-NULL count over the anchor's total
-        (grids exclude null values by construction, so the two measure
-        the same rows)."""
         refs = [self._col_ref(c, query) for c in cols]
-        try:
-            model = self.select_model(query)
-        except ValueError:
-            model = None
-        if model is not None:
-            gm, fjs = model._grouped_value_masses(cols[:-1], cols[-1], query)
-            return {
-                key + (v,): fjs * mass
-                for key, vm in gm.items()
-                for v, mass in vm.items()
-            }
-        m, local = self._anchor_local(query, refs)
-        gm, fjs = m._grouped_value_masses(cols[:-1], cols[-1], local)
-        tot = fjs * sum(mass for vm in gm.values() for mass in vm.values())
-        if tot <= 0:
-            return {}
-        nn = [Condition(t, c, "IS_NOT_NULL") for t, c in refs]
-        sc = self._chain_count(query, nn) / tot
-        return {
-            key + (v,): fjs * mass * sc
-            for key, vm in gm.items()
-            for v, mass in vm.items()
-        }
+        return self._distinct_counts(query, refs)[()]
 
     def quantile(
         self, query: Query, col: str, qs: list[float]
@@ -1918,13 +1813,13 @@ class SPNEnsemble:
         Terms whose table set NO single model covers get their
         (est, sd) from the factor chain: COUNT via
         _factorized_count_moments, SUM via _factorized_sum_moments
-        (anchor AVG × count chain, round 6), grouped via
-        _factorized_grouped_ci_moments (round 8). COUNT(DISTINCT) gets
+        (anchor AVG × count chain), grouped via
+        _factorized_grouped_ci_moments. COUNT(DISTINCT) gets
         Poisson-occupancy moments over the signed per-value masses
-        (_occupancy_moments — round 8); HAVING filters groups by their
-        point estimates (round 8 — same approximation class as aqp's
-        HAVING). Composite aggregates (agg ± agg) raise
-        ModelPlaneUnsupported, as on the single-model path."""
+        (_occupancy_moments); HAVING filters groups by their point
+        estimates (same approximation class as aqp's HAVING).
+        Composite aggregates (agg ± agg) raise ModelPlaneUnsupported,
+        as on the single-model path."""
         _refuse_composite_ci(query)
         z = z_value(confidence)
         gb_cols = [c for _t, c in query.group_bys]
@@ -1964,7 +1859,7 @@ class SPNEnsemble:
                     # lo is clamped at 0 for presentation, so
                     # (hi-lo)/2z understates sd by up to 2x whenever
                     # the clamp fired — exactly the small/noisy counts
-                    # where negative IE terms matter (round-5 advice)
+                    # where negative IE terms matter
                     sd = row.get("sd")
                     if sd is None:
                         sd = (row["hi"] - row["lo"]) / (2.0 * z)
@@ -1978,10 +1873,12 @@ class SPNEnsemble:
         per_op: list[tuple[str, str, dict]] = []  # (name, kind, moments)
         for op in query.aggregations:
             if op.distinct:
-                # round 8: Poisson-occupancy moments replace the
-                # refusal — grouped via per-(group, value) masses
+                # Poisson-occupancy moments, grouped via per-(group,
+                # value) masses
                 name = op.alias or "count_distinct"
-                moments = self._occupancy_moments(query, op.operands[0], gb_cols)
+                moments = self._occupancy_moments(
+                    query, op.operands[:1], query.group_bys
+                )
                 visible.update(moments)
                 per_op.append((name, "count", moments))
             elif op.agg_type is AggregationType.COUNT:
@@ -1996,10 +1893,9 @@ class SPNEnsemble:
                 )
             else:  # AVG = signed-SUM / signed-not-null-COUNT, delta method
                 name = op.alias or "avg"
-                t, c = op.operands[0]
                 s_m = signed_moments(AggregationType.SUM, op.operands)
                 c_m = signed_moments(
-                    AggregationType.COUNT, [], [Condition(t, c, "IS_NOT_NULL")]
+                    AggregationType.COUNT, [], _not_null(op.operands[:1])
                 )
                 ratio: dict[tuple, list[float]] = {}
                 for key in set(s_m) | set(c_m):
@@ -2027,8 +1923,8 @@ class SPNEnsemble:
                 row.update({"agg": name, "est": est, "lo": lo, "hi": hi})
                 key_rows.append(row)
                 ests[name] = est
-            # HAVING (round 8, was a refusal): membership decided on
-            # the point estimates, same approximation class as aqp()
+            # HAVING: membership decided on the point estimates, same
+            # approximation class as aqp()
             if query.having and not _apply_having([ests], query.having):
                 continue
             out.extend(key_rows)

@@ -725,18 +725,28 @@ class SPNModel:
                     features[mul_idx] = _inv_max1
         return ranges, features
 
+    def _scope(self, query: Query | None) -> tuple[dict[int, Range], dict]:
+        """(cond, features) of ``query`` on this model: its conditions
+        as column ranges, intersected with the join-scope corrections'
+        null-indicator ranges, plus the inverse-multiplier features
+        (correction_factors). Null-indicator ranges exclude dangling
+        outer-join rows and inverse multipliers de-weight fanout, so
+        ``full_join_size`` times an expectation here counts rows of the
+        query's own sub-scope. No query: the whole model, uncorrected."""
+        if query is None:
+            return {}, {}
+        cond = self.conditions_to_ranges(query)
+        extra, features = self.correction_factors(query)
+        for i, r in extra.items():
+            cond[i] = intersect_ranges(cond[i], r) if i in cond else r
+        return cond, features
+
     # -- multi-SPN factor support (B11) --------------------------------
-    def _wexp_args(
-        self, sub_query: Query, rel: Relationship, with_conditions: bool
-    ) -> tuple[dict, dict]:
+    def _wexp_args(self, sub_query: Query, rel: Relationship) -> tuple[dict, dict]:
         """(cond, feats) for the fanout-weighted expectation — shared
         by the value path (_weighted_expectation) and the variance
         path (_weighted_expectation_moments), both memoized."""
-        cond = self.conditions_to_ranges(sub_query) if with_conditions else {}
-        extra, features = self.correction_factors(sub_query)
-        for i, r in extra.items():
-            cond[i] = intersect_ranges(cond[i], r) if i in cond else r
-        feats = dict(features)
+        cond, feats = self._scope(sub_query)
         mul_idx = self._col_index(rel.multiplier_attribute_name)
         if any(r.identifier == rel.identifier for r in self.relationships):
             # internal edge: the model's full-join measure already
@@ -753,9 +763,7 @@ class SPNModel:
             feats[mul_idx] = _identity
         return cond, feats
 
-    def _weighted_expectation(
-        self, sub_query: Query, rel: Relationship, with_conditions: bool
-    ) -> float:
+    def _weighted_expectation(self, sub_query: Query, rel: Relationship) -> float:
         """E[ mul_rel * 1(conds of sub_query) * corr ] in the measure
         of ``sub_query``'s table set — the building block of cross-
         model factors (reference: ensemble_compilation/
@@ -764,17 +772,17 @@ class SPNModel:
         model covers; each parent row is weighted by its child fanout
         so the factor is conditioned on "referenced by a random
         qualifying child"."""
-        cond, feats = self._wexp_args(sub_query, rel, with_conditions)
+        cond, feats = self._wexp_args(sub_query, rel)
         return self._eval(cond, feats)
 
     def _weighted_expectation_moments(
-        self, sub_query: Query, rel: Relationship, with_conditions: bool
+        self, sub_query: Query, rel: Relationship
     ) -> tuple[float, float]:
         """(value, sampling variance) of the fanout-weighted
         expectation via the per-node variance pass — the B10 machinery
         applied to a B11 factor term, so multi-model OR CIs can
         propagate each factor's uncertainty through the product."""
-        cond, feats = self._wexp_args(sub_query, rel, with_conditions)
+        cond, feats = self._wexp_args(sub_query, rel)
         return self._eval(cond, feats, moments=True)
 
     def _card_moments(self, query: Query) -> tuple[float, float]:
@@ -782,10 +790,7 @@ class SPNModel:
         cardinality = full_join_size * p; var_p from the per-node
         variance pass (B10). Relative variance var_p/p**2 is scale-
         free, which is what factor-chain composition needs."""
-        cond = self.conditions_to_ranges(query)
-        extra, features = self.correction_factors(query)
-        cond.update(extra)
-        return self._eval(cond, features, moments=True)
+        return self._eval(*self._scope(query), moments=True)
 
     def fanout_conditional_factor(
         self, nom_query: Query, rel: Relationship, denom_query: Query
@@ -797,16 +802,13 @@ class SPNModel:
         scope. ``denom_query`` carries only the conditions both sides
         share (the ensemble's exploit_overlapping overlap set — empty
         without overlap), so the ratio is conditioned on them."""
-        nom = self._weighted_expectation(nom_query, rel, True)
-        den = self._weighted_expectation(denom_query, rel, True)
+        nom = self._weighted_expectation(nom_query, rel)
+        den = self._weighted_expectation(denom_query, rel)
         return nom / den if den > 0 else 0.0
 
     # -- answering -----------------------------------------------------
     def cardinality(self, query: Query) -> float:
-        cond = self.conditions_to_ranges(query)
-        extra, features = self.correction_factors(query)
-        cond.update(extra)
-        return self.full_join_size * self._eval(cond, features)
+        return self.full_join_size * self._eval(*self._scope(query))
 
     def cardinality_many(self, queries: list[Query]) -> list[float]:
         """Batch cardinality: all queries priced in ONE tree pass
@@ -816,13 +818,7 @@ class SPNModel:
         walking the tree once per subset."""
         from .nodes import evaluate_many
 
-        conds = []
-        for q in queries:
-            cond = self.conditions_to_ranges(q)
-            extra, features = self.correction_factors(q)
-            cond.update(extra)
-            conds.append((cond, features))
-        vec = evaluate_many(self.root, conds)
+        vec = evaluate_many(self.root, [self._scope(q) for q in queries])
         return [self.full_join_size * float(v) for v in vec]
 
     def _agg_value(self, query: Query, op_aggs, cond, features) -> float:
@@ -882,17 +878,9 @@ class SPNModel:
         sample bias the count low. Same trust model as every other
         estimate here: budget-tested, not exact."""
         idx = [self._col_index(c) for c in cols]
-        cond: dict = {}
-        features: dict = {}
-        if query is not None:
-            cond = dict(self.conditions_to_ranges(query))
-            # join-scope corrections as in cardinality/aqp: nn ranges
-            # exclude dangling outer-join rows, inverse multipliers
-            # de-weight fanout — expected-rows thresholds then refer
-            # to the query's sub-scope, not the replicated join
-            extra, features = self.correction_factors(query)
-            cond.update(extra)
-        _axes, grid = self._eval(cond, features, axes=idx)
+        # expected-rows thresholds refer to the query's sub-scope, not
+        # the replicated join (_scope's corrections)
+        _axes, grid = self._eval(*self._scope(query), axes=idx)
         # expected-rows threshold (matches aqp's count>=0.5 group
         # pruning): a strict p>0 would count 1e-300 Sum-node residues
         # and every independence-product cross combination
@@ -909,68 +897,36 @@ class SPNModel:
         de-weight fanout replication, so full_join_size * mass is the
         expected SUB-SCOPE row count at that value."""
         i = self._col_index(col)
-        cond: dict = {}
-        features: dict = {}
-        if query is not None:
-            cond = dict(self.conditions_to_ranges(query))
-            extra, features = self.correction_factors(query)
-            cond.update(extra)
-        axes, masses = self._eval(cond, features, axes=[i])
+        axes, masses = self._eval(*self._scope(query), axes=[i])
         return axes[i], masses.reshape(-1)
 
     def _grouped_value_masses(
-        self, gb_cols: list[str], col: str, query: Query | None = None
-    ) -> tuple[dict[tuple, dict], float]:
-        """({decoded group key tuple: {decoded col value: mass}},
-        full_join_size) in ONE batch grid pass over (group axes ×
-        col axis) — the per-group analogue of _value_masses and the
-        building block for the ensemble's grouped COUNT(DISTINCT)
-        under cross-column OR, where inclusion-exclusion must sign
-        these masses BEFORE the expected-rows threshold (signing
-        thresholded per-term counts is not valid set algebra). Keys
-        and values are DECODED so masses from different models (each
-        with its own dictionary) combine correctly. When ``col`` is
-        itself a group axis each group cell carries exactly its own
-        value. Same GroupByExplosion cap as every grid here."""
-        gb_idx = [self._col_index(c) for c in gb_cols]
-        ci = self._col_index(col)
-        cond: dict = {}
-        features: dict = {}
-        if query is not None:
-            cond = dict(self.conditions_to_ranges(query))
-            extra, features = self.correction_factors(query)
-            cond.update(extra)
-        axis_cols = list(gb_idx) + ([ci] if ci not in gb_idx else [])
-        axes, grid = self._eval(cond, features, axes=axis_cols)
-        if grid.size == 0:
-            return {}, self.full_join_size
-        gb_dec = [self._decoder(c) for c in gb_cols]
-        out: dict[tuple, dict] = {}
-        if ci in gb_idx:
-            pos = gb_idx.index(ci)
-            for idx in np.argwhere(grid != 0.0):
-                key = tuple(
-                    gb_dec[a](axes[i][j])
-                    for a, (i, j) in enumerate(zip(gb_idx, idx))
-                )
-                vm = out.setdefault(key, {})
-                vm[key[pos]] = vm.get(key[pos], 0.0) + float(grid[tuple(idx)])
-            return out, self.full_join_size
-        col_dec = self._decoder(col)
-        dec_vals = [col_dec(v) for v in axes[ci]]
-        grid = grid.reshape([len(axes[i]) for i in gb_idx] + [len(axes[ci])])
-        for idx in np.ndindex(*(len(axes[i]) for i in gb_idx)):
-            vec = grid[idx]
-            if not np.any(vec):
-                continue
-            key = tuple(
-                gb_dec[a](axes[i][j]) for a, (i, j) in enumerate(zip(gb_idx, idx))
-            )
-            vm = out.setdefault(key, {})
-            for j in np.flatnonzero(vec):
-                dv = dec_vals[j]
-                vm[dv] = vm.get(dv, 0.0) + float(vec[j])
-        return out, self.full_join_size
+        self, cols: list[str], query: Query | None = None
+    ) -> dict[tuple, float]:
+        """{decoded cell over ``cols``: expected sub-scope rows} for
+        every cell of nonzero mass, from ONE batch grid pass — the
+        per-cell analogue of _value_masses and the building block of
+        the ensemble's COUNT(DISTINCT) masses (grouped: the group
+        columns followed by the value column), which inclusion-
+        exclusion must sign BEFORE the expected-rows threshold (signing
+        thresholded per-term counts is not valid set algebra). Cells
+        are DECODED so masses from different models (each with its own
+        dictionary) combine correctly. A column named twice is one grid
+        axis, so a value column that is also a group axis carries its
+        group's own value. Same GroupByExplosion cap as every grid
+        here."""
+        idx = [self._col_index(c) for c in cols]
+        uniq = list(dict.fromkeys(idx))
+        axes, grid = self._eval(*self._scope(query), axes=uniq)
+        decoded = [
+            list(map(self._decoder(self.column_names[i]), axes[i])) for i in uniq
+        ]
+        pos = [uniq.index(i) for i in idx]
+        fjs = self.full_join_size
+        return {
+            tuple(decoded[p][cell[p]] for p in pos): fjs * float(grid[tuple(cell)])
+            for cell in np.argwhere(grid != 0.0)
+        }
 
     def quantile(
         self, col: str, qs: list[float], query: Query | None = None
@@ -1003,9 +959,7 @@ class SPNModel:
     def aqp(self, query: Query) -> list[dict]:
         """Approximate aggregate answer; one dict per output row
         (reference: spn_ensemble.py::evaluate_query, B12)."""
-        base_cond = self.conditions_to_ranges(query)
-        extra, features = self.correction_factors(query)
-        base_cond.update(extra)
+        base_cond, features = self._scope(query)
 
         if not query.group_bys:
             return _fold_aggregates(
@@ -1098,9 +1052,7 @@ class SPNModel:
         confidence_interval_evaluation over grouped AQP queries)."""
         _refuse_composite_ci(query)
         z = z_value(confidence)
-        cond = self.conditions_to_ranges(query)
-        extra, features = self.correction_factors(query)
-        cond.update(extra)
+        cond, features = self._scope(query)
 
         if query.group_bys:
             # grouped CIs (reference: confidence_interval_evaluation
@@ -1126,11 +1078,10 @@ class SPNModel:
                         combo_cond[i] = NumericRange([(code, code, True, True)])
                     group_vals[c] = decoders[a](code)
                 rows_k = self._ci_rows(query, combo_cond, features, z)
-                # HAVING on the CI plane (round 8, was a refusal):
-                # group membership is decided on the POINT estimates —
-                # the same approximation class as aqp()'s HAVING, so
-                # groups near the threshold can flip; the intervals of
-                # surviving groups are unchanged
+                # HAVING on the CI plane: group membership is decided
+                # on the POINT estimates — the same approximation class
+                # as aqp()'s HAVING, so groups near the threshold can
+                # flip; the intervals of surviving groups are unchanged
                 if query.having and not _apply_having(
                     [{r["agg"]: r["est"] for r in rows_k}], query.having
                 ):

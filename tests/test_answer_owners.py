@@ -9,7 +9,12 @@ owner (README "Model-plane answer algebra").
   (SPNModel._decoder);
 - spn/model.py walks the tree (point, variance and grid passes, axis
   domains) only from the factor-cache owner (SPNModel._eval), so every
-  walk is served from, and bounded by, the one cache.
+  walk is served from, and bounded by, the one cache;
+- spn/model.py turns a query into join-scope corrections only in its
+  scope owner (SPNModel._scope), so condition and correction ranges
+  merge by one rule;
+- spn/ensemble.py reads a model's mass grids only from the mass owner
+  (SPNEnsemble._cell_masses); quantile alone reads per-value masses.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 PACKAGE = sorted((REPO / "deepdb_public_spark").rglob("*.py"))
+MODEL = REPO / "deepdb_public_spark" / "spn" / "model.py"
+ENSEMBLE = REPO / "deepdb_public_spark" / "spn" / "ensemble.py"
 
 
 def _owners(files: list[Path], match) -> set[tuple[str, str]]:
@@ -51,12 +58,16 @@ def _is_plus(node: ast.AST) -> bool:
     )
 
 
-def _calls_ie_terms(node: ast.AST) -> bool:
-    return (
-        isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "_ie_terms"
-    )
+def _calls(*names: str):
+    """Matcher for a call of any of ``names``, bare or as a method."""
+
+    def match(node: ast.AST) -> bool:
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        return (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) in names
+
+    return match
 
 
 def _inverts_dictionary(node: ast.AST) -> bool:
@@ -79,17 +90,6 @@ def _inverts_dictionary(node: ast.AST) -> bool:
     )
 
 
-_WALKS = {"evaluate", "evaluate_groupby", "evaluate_with_variance", "distinct_values"}
-
-
-def _walks_the_tree(node: ast.AST) -> bool:
-    if not isinstance(node, ast.Call):
-        return False
-    f = node.func
-    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-    return name in _WALKS
-
-
 def test_aggregate_fold_is_the_only_reader_of_plus():
     spn = [p for p in PACKAGE if p.parent.name == "spn"]
     assert _owners(spn, _is_plus) == {
@@ -98,7 +98,7 @@ def test_aggregate_fold_is_the_only_reader_of_plus():
 
 
 def test_signed_sum_is_the_only_expander_of_ie_terms():
-    assert _owners(PACKAGE + [REPO / "__spark_entry__.py"], _calls_ie_terms) == {
+    assert _owners(PACKAGE + [REPO / "__spark_entry__.py"], _calls("_ie_terms")) == {
         ("deepdb_public_spark/spn/ensemble.py", "_signed_sum"),
         ("deepdb_public_spark/spn/ensemble.py", "_ie_terms"),
     }
@@ -111,7 +111,22 @@ def test_decoder_is_the_only_inverse_dictionary():
 
 
 def test_factor_cache_owner_is_the_only_tree_walker_in_the_model():
-    model = REPO / "deepdb_public_spark" / "spn" / "model.py"
-    assert _owners([model], _walks_the_tree) == {
-        ("deepdb_public_spark/spn/model.py", "_eval")
+    walks = _calls(
+        "evaluate", "evaluate_groupby", "evaluate_with_variance", "distinct_values"
+    )
+    assert _owners([MODEL], walks) == {("deepdb_public_spark/spn/model.py", "_eval")}
+
+
+def test_scope_owner_is_the_only_reader_of_correction_factors():
+    assert _owners([MODEL], _calls("correction_factors")) == {
+        ("deepdb_public_spark/spn/model.py", "_scope")
+    }
+
+
+def test_cell_mass_owner_is_the_only_reader_of_mass_grids():
+    assert _owners([ENSEMBLE], _calls("_grouped_value_masses")) == {
+        ("deepdb_public_spark/spn/ensemble.py", "_cell_masses")
+    }
+    assert _owners([ENSEMBLE], _calls("_value_masses")) == {
+        ("deepdb_public_spark/spn/ensemble.py", "quantile")
     }

@@ -149,7 +149,7 @@ def test_grouped_distinct_or_uncovered_now_estimates(two_model_engine):
     table and the distinct column's table in one connected piece: was
     a round-7 ModelPlaneUnsupported; round 8 pins each cross-piece
     group key and reads the pinned query's per-value masses
-    (_chain_grouped_value_masses fallback). Estimates must track the
+    (_cell_masses fallback). Estimates must track the
     exact plane."""
     eng = two_model_engine
     sql = (
@@ -245,10 +245,11 @@ def test_grouped_factorized_null_group_scaling(spark):
 
 
 def test_chain_value_masses_sum_invariant(two_model_engine):
-    """By construction, the factorized per-value masses sum to the
-    factor chain's NOT-NULL count (the scaling target); the
-    single-model branch sums to the covering model's NOT-NULL count.
-    Pins the normalization so a future refactor cannot silently
+    """By construction, the factorized cell masses (_cell_masses) sum
+    to the factor chain's count with every axis NOT NULL (the scaling
+    target) — per value, per (group, value) and per multi-column cell;
+    the single-model branch sums to the covering model's NOT-NULL
+    count. Pins the normalization so a future refactor cannot silently
     change the measure the 0.5-row threshold is taken in."""
     from deepdb_public_spark.plans.query import Condition, Query, QueryType
 
@@ -259,13 +260,29 @@ def test_chain_value_masses_sum_invariant(two_model_engine):
         "orders.o_orderstatus = 'F' AND lineitem.l_discount <= 0.06"
     )
     q = eng.parse(sql)
-    vm = eng.ensemble._chain_value_masses(q, ("lineitem", "l_quantity"))
-    qc = Query(
-        query_type=QueryType.CARDINALITY,
-        table_set=set(q.table_set),
-        relationship_set=set(q.relationship_set),
-        conditions=list(q.conditions)
-        + [Condition("lineitem", "l_quantity", "IS_NOT_NULL")],
+
+    def chain(axes) -> float:
+        qc = Query(
+            query_type=QueryType.CARDINALITY,
+            table_set=set(q.table_set),
+            relationship_set=set(q.relationship_set),
+            conditions=list(q.conditions)
+            + [Condition(t, c, "IS_NOT_NULL") for t, c in axes],
+        )
+        return float(eng.ensemble.cardinality(qc))
+
+    quantity = ("lineitem", "l_quantity")
+    flag = ("lineitem", "l_returnflag")
+    status = ("lineitem", "l_linestatus")
+    vm = eng.ensemble._cell_masses(q, [quantity])
+    assert sum(vm.values()) == pytest.approx(chain([quantity]), rel=1e-6)
+    grouped = eng.ensemble._cell_masses(q, [quantity], [flag])
+    assert {len(cell) for cell in grouped} == {2}
+    assert sum(grouped.values()) == pytest.approx(
+        chain([flag, quantity]), rel=1e-6
     )
-    chain = float(eng.ensemble.cardinality(qc))
-    assert sum(vm.values()) == pytest.approx(chain, rel=1e-6)
+    multi = eng.ensemble._cell_masses(q, [status, quantity])
+    assert {len(cell) for cell in multi} == {2}
+    assert sum(multi.values()) == pytest.approx(
+        chain([status, quantity]), rel=1e-6
+    )

@@ -329,7 +329,7 @@ def test_grouped_distinct_under_or_cross_piece(cross_piece_setup):
     """Grouped COUNT(DISTINCT cust.tier) under a cross-column OR with
     the group table ({ord}) and the distinct column's table ({cust})
     in different models: rides the round-8 per-key pinned value-mass
-    fallback in _chain_grouped_value_masses instead of raising."""
+    fallback in SPNEnsemble._cell_masses instead of raising."""
     from deepdb_public_spark.plans.query import (
         AggOperation,
         AggregationOperationType,
